@@ -6475,7 +6475,7 @@ FROM (VALUES
 # formulas off event_id, so the oracle replays them bit-exactly) →
 # RestFeedDataSource polls it with the cursor as the SOURCE OFFSET in
 # Spark's checkpoint (q118's exactly-once discipline, 2 polls + the
-# empty drain) → position_store_state (applyInPandasWithState keyed
+# empty drain) → position_store_state (native streaming-aggregate keyed
 # device store, streaming/state.py) upserts into the snapshot/delta
 # sink (q103's executor-side anti-join merge) → the q42 staleness
 # classification against the feed clock (max ts − 30 min). The batch

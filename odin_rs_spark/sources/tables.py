@@ -66,7 +66,7 @@ def load_table(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> 
     failure is LOUD, never silent wrong rows, and the supported
     self-join spelling works unchanged: join .alias()'d references
     with F.col("l.x") / string-name conditions (pinned by
-    tests/test_tables.py::test_memoized_self_join_contract)."""
+    tests/test_plan_quality.py::test_memoized_self_join_contract)."""
     path = os.path.join(sf_dir, f"{name}.parquet")
     try:
         st = os.stat(path)

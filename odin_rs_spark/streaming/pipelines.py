@@ -16,6 +16,7 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 def classify_events(stream: DataFrame) -> DataFrame:
@@ -100,12 +101,16 @@ def atomic_snapshot_swap(new_snap: DataFrame, snapshot_dir: str) -> None:
     shutil.rmtree(retired, ignore_errors=True)
 
 
-def read_snapshot(spark: SparkSession, snapshot_dir: str) -> DataFrame | None:
+def read_snapshot(
+    spark: SparkSession, snapshot_dir: str, schema: StructType | None = None
+) -> DataFrame | None:
     """Read the current snapshot, running crash recovery first; None if
-    no snapshot has ever been committed."""
+    no snapshot has ever been committed. A known `schema` skips the
+    parquet schema-inference job."""
     recover_snapshot(snapshot_dir)
     if os.path.exists(snapshot_dir):
-        return spark.read.parquet(snapshot_dir)
+        reader = spark.read if schema is None else spark.read.schema(schema)
+        return reader.parquet(snapshot_dir)
     return None
 
 
@@ -132,9 +137,9 @@ def latest_per_key_merge(key_cols: list[str]):
     def merge(old: DataFrame | None, batch_df: DataFrame) -> DataFrame:
         if old is None:
             return batch_df
-        keep = old.join(
-            batch_df.select(*key_cols).distinct(), on=key_cols, how="left_anti"
-        )
+        # a left-anti join ignores duplicate keys on its right side, so
+        # no distinct (and no extra shuffle) is needed before it
+        keep = old.join(batch_df.select(*key_cols), on=key_cols, how="left_anti")
         return batch_df.unionByName(keep)
 
     return merge
@@ -158,25 +163,41 @@ def snapshot_delta_sink(
     Parquet stands in for a transactional table format; on a cluster
     this sink is a Delta MERGE + CDF read, same shape (see
     `atomic_snapshot_swap` for the exact swap point).
+
+    The batch is used twice (delta append, merge), so it is materialized
+    once with `localCheckpoint()`, not `persist()`: on a micro-batch of a
+    streaming aggregate whose result is read back through struct fields
+    (`position_store_state`), the first action over a persisted batch
+    fails with `NoSuchElementException: key not found` on the grouping
+    attribute, while a local checkpoint cuts the plan from its streaming
+    lineage. Spark's context cleaner frees the checkpoint blocks once the
+    JVM collects the checkpointed plan (at the latest on its periodic
+    GC), so a long-running stream does not accumulate them.
+
+    The closure keeps the schema of the last snapshot it wrote (the
+    merge's output schema, which can differ from the batch's) and reads
+    the old snapshot with it, so no batch after the first pays a parquet
+    schema-inference job; the first batch after a restart still infers
+    it.
     """
+    snap_schema = None
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
+        nonlocal snap_schema
         spark = batch_df.sparkSession
-        batch_df.persist()
-        try:
-            (
-                batch_df.withColumn("__batch_id", F.lit(batch_id))
-                .write.mode("append")
-                .parquet(delta_dir)
-            )
-            if merge_fn is not None:
-                old = read_snapshot(spark, snapshot_dir)
-                new_snap = merge_fn(old, batch_df)
-                atomic_snapshot_swap(new_snap, snapshot_dir)
-            else:
-                batch_df.write.mode("overwrite").parquet(snapshot_dir)
-        finally:
-            batch_df.unpersist()
+        batch_df = batch_df.localCheckpoint()
+        (
+            batch_df.withColumn("__batch_id", F.lit(batch_id))
+            .write.mode("append")
+            .parquet(delta_dir)
+        )
+        if merge_fn is not None:
+            old = read_snapshot(spark, snapshot_dir, snap_schema)
+            new_snap = merge_fn(old, batch_df)
+            atomic_snapshot_swap(new_snap, snapshot_dir)
+            snap_schema = new_snap.schema
+        else:
+            batch_df.write.mode("overwrite").parquet(snapshot_dir)
 
     return sink
 

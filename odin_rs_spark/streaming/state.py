@@ -3,6 +3,8 @@
 Parity targets (behavior only):
   ttl_latest_state   ~ stale-aircraft eviction + removed list (T3)
                        odin_adsb/src/lib.rs:77-133
+  position_store_state ~ gpshub keyed device store (T3)
+                       gpshub/src/models.rs DeviceStore
   track_trace_state  ~ Aircraft::push_position ring buffer + <0.8 s
                        collapse (W3/T3)  odin_adsb/src/lib.rs:221-244
   inactive_flags     ~ per-device inactive alerting (T4)
@@ -17,6 +19,14 @@ state store shards it across executors; nothing here collects to the
 driver. Per-key state is bounded (max_len positions / one row), so
 state-store size is O(#keys), the same bound the reference's ring
 buffers enforce.
+
+Where a built-in aggregate can hold the state, it does:
+position_store_state is a native streaming aggregation (newest fix as a
+struct max, a running count), so its state lives in the JVM state store
+and no Python worker runs. ttl_latest_state and track_trace_state stay
+on applyInPandasWithState — they need processing-time timers and a
+ring buffer with near-duplicate collapse, which no built-in aggregate
+expresses.
 """
 
 from __future__ import annotations
@@ -143,17 +153,9 @@ _POS_OUT = StructType(
         StructField("n_updates", LongType()),
     ]
 )
-_POS_STATE = StructType(
-    [
-        StructField("ts_us", LongType()),
-        StructField("lat", DoubleType()),
-        StructField("lon", DoubleType()),
-        StructField("n_updates", LongType()),
-    ]
-)
 
 
-def position_store_state(grouped, output_mode: str = "update") -> DataFrame:
+def position_store_state(grouped) -> DataFrame:
     """Latest-position-per-device store (T3): the streaming
     restatement of the reference's GPS hub — JSON position updates
     PUT per device land in a keyed store that always serves each
@@ -163,43 +165,24 @@ def position_store_state(grouped, output_mode: str = "update") -> DataFrame:
     keys discipline), so the store itself needs no timers and drains
     cleanly under Trigger.AvailableNow.
 
-    `grouped` is `stream.groupBy(key_col)` over columns
+    `grouped` is `stream.groupBy("key")` over columns
     (key string, ts timestamp, lat double, lon double). Emits one
-    row per updated key per micro-batch.
+    row per updated key per micro-batch (update output mode) with the
+    schema `_POS_OUT`.
+
+    A built-in streaming aggregate: the newest fix is the max of the
+    struct (ts, lat, lon) and the update count a running count, both
+    kept in the JVM state store (O(#keys)) with no Python worker.
+    Exact-`ts` ties break on the struct order: the fix with the larger
+    lat, then the larger lon, wins — within one micro-batch and across
+    batches alike, so the result never depends on row arrival order.
     """
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        k = key[0]
-        ts_us, lat, lon, n = (
-            state.get if state.exists else (0, float("nan"), float("nan"), 0)
-        )
-        for pdf in pdfs:
-            # last-occurrence-of-max argmax, same selection as the prior
-            # stable sort + iloc[-1] at a fraction of the per-group cost
-            iv = pdf["ts"].to_numpy().view("i8")
-            i = int(len(iv) - 1 - iv[::-1].argmax())
-            new_us = int(iv[i] // 1_000)
-            if new_us >= ts_us:
-                ts_us = new_us
-                lat, lon = float(pdf["lat"].iat[i]), float(pdf["lon"].iat[i])
-            n += len(pdf)
-        state.update((ts_us, lat, lon, n))
-        yield pd.DataFrame(
-            {
-                "key": [k],
-                "ts": [pd.Timestamp(ts_us, unit="us")],
-                "lat": [lat],
-                "lon": [lon],
-                "n_updates": [n],
-            }
-        )
-
-    return grouped.applyInPandasWithState(
-        fn, _POS_OUT, _POS_STATE, output_mode, GroupStateTimeout.NoTimeout
-    )
+    out = grouped.agg(
+        F.max(F.struct("ts", "lat", "lon")).alias("fix"),
+        F.count(F.lit(1)).alias("n_updates"),
+    ).select("key", "fix.ts", "fix.lat", "fix.lon", "n_updates")
+    # pin the served types whatever numeric types the feed carries
+    return out.select(*(F.col(f.name).cast(f.dataType) for f in _POS_OUT.fields))
 
 
 # --------------------------------------------------------------------------

@@ -1010,3 +1010,33 @@ def test_memoized_self_join_contract(spark, sf_dir):
 
     with _pytest.raises(AnalysisException):
         a.join(b, a["r_regionkey"] < b["r_regionkey"]).count()
+
+
+def test_position_store_state_runs_without_python_worker(spark, tmp_path):
+    """The keyed position store is a native streaming aggregation: its
+    executed plan keeps state in StateStoreSave and has no
+    FlatMapGroupsInPandasWithState node (no Python worker per key)."""
+    import datetime as dt
+
+    from odin_rs_spark.streaming import sources
+    from odin_rs_spark.streaming.state import position_store_state
+
+    t0 = dt.datetime(2024, 1, 1)
+    df = spark.createDataFrame(
+        [(f"d{i % 3}", t0 + dt.timedelta(seconds=i), 35.0, -100.0) for i in range(6)],
+        "key string, ts timestamp, lat double, lon double",
+    )
+    root = str(tmp_path / "replay")
+    sources.split_for_replay(df, root, n_chunks=1, order_col="ts")
+    store = position_store_state(sources.replay_stream(spark, root, df.schema).groupBy("key"))
+    q = (
+        store.writeStream.foreachBatch(lambda d, b: d.count())
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .outputMode("update")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    plan = q._jsq.explainInternal(False)
+    assert "StateStoreSave" in plan, plan
+    assert "FlatMapGroupsInPandasWithState" not in plan, plan

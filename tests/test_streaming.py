@@ -594,3 +594,128 @@ def test_position_store_state_matches_batch_latest_fix(spark, tmp_path):
     assert final["d2"].lat == 36.3 and final["d2"].n_updates == 2
     assert final["d3"].n_updates == 1
     assert final["d1"].ts == dt.datetime.fromisoformat("2024-01-01 10:02:00")
+    assert [(f.name, f.dataType) for f in out.schema] == [
+        (f.name, f.dataType) for f in state._POS_OUT
+    ]
+
+
+def test_position_store_state_ts_ties_break_on_lat_lon(spark, tmp_path):
+    """Two fixes of one key at the same ts: the larger (lat, lon) wins,
+    within one micro-batch and across batches alike — never the row that
+    happened to arrive last."""
+    t = dt.datetime(2024, 1, 1, 10, 0, 0)
+    rows = [
+        # batch 1
+        (0, "d1", t, 35.0, -100.0),
+        (1, "d1", t, 35.5, -101.0),  # same batch: larger lat wins
+        (2, "d2", t, 36.5, -100.0),
+        # batch 2
+        (3, "d2", t, 36.0, -99.0),  # later batch, smaller lat: loses
+        (4, "d3", t, 37.0, -102.0),
+        (5, "d3", t, 37.0, -101.5),  # lat tie: larger lon wins
+    ]
+    df = spark.createDataFrame(
+        rows, "seq int, key string, ts timestamp, lat double, lon double"
+    )
+    root = str(tmp_path / "replay")
+    sources.split_for_replay(df, root, n_chunks=2, order_col="seq")
+    stream = sources.replay_stream(spark, root, df.schema)
+    out = state.position_store_state(
+        stream.select("key", "ts", "lat", "lon").groupBy("key")
+    )
+    emitted: list = []
+    pipelines.run_available_now(
+        out,
+        lambda d, bid: emitted.append(d.collect()),
+        str(tmp_path / "ckpt"),
+    )
+    assert len(emitted) == 2
+    final = {r.key: (r.lat, r.lon, r.n_updates) for b in emitted for r in b}
+    assert final == {
+        "d1": (35.5, -101.0, 2),
+        "d2": (36.5, -100.0, 2),
+        "d3": (37.0, -101.5, 2),
+    }
+
+
+def test_snapshot_delta_sink_over_native_streaming_aggregate(spark, tmp_path):
+    """A micro-batch of a built-in streaming aggregate through the sink
+    over several batches: the batch must be materialized in a way that
+    survives the aggregate's plan (persist() of this shape fails with
+    NoSuchElementException), and the snapshot ends at latest-per-key."""
+    t0 = dt.datetime(2024, 1, 1, 10, 0, 0)
+    rows = [
+        (f"d{i % 5}", t0 + dt.timedelta(seconds=i), float(i)) for i in range(30)
+    ]
+    df = spark.createDataFrame(rows, "key string, ts timestamp, value double")
+    root = str(tmp_path / "replay")
+    sources.split_for_replay(df, root, n_chunks=3, order_col="ts")
+    # the position store's shape: a struct max read back field by field
+    agg = (
+        sources.replay_stream(spark, root, df.schema)
+        .groupBy("key")
+        .agg(F.max(F.struct("ts", "value")).alias("fix"), F.count(F.lit(1)).alias("n"))
+        .select("key", "fix.ts", "fix.value", "n")
+    )
+    snap, delta = str(tmp_path / "snap"), str(tmp_path / "delta")
+    pipelines.run_available_now(
+        agg,
+        pipelines.snapshot_delta_sink(
+            snap, delta, pipelines.latest_per_key_merge(["key"])
+        ),
+        str(tmp_path / "ckpt"),
+    )
+    d = spark.read.parquet(delta)
+    assert d.select("__batch_id").distinct().count() == 3
+    assert d.count() == 15  # every key updated in each of the 3 batches
+    got = {r.key: (r.ts, r.value, r.n) for r in spark.read.parquet(snap).collect()}
+    assert got == {
+        f"d{k}": (t0 + dt.timedelta(seconds=25 + k), 25.0 + k, 6) for k in range(5)
+    }
+
+
+def test_snapshot_delta_sink_resumes_with_merge_schema(spark, tmp_path):
+    """The sink reads the old snapshot with the schema of the snapshot it
+    last wrote — the merge's output, not the batch's (here the merge adds
+    a column). A fresh sink closure over an existing snapshot directory,
+    as after a restart, has no such schema and falls back to inference."""
+    snap, delta = str(tmp_path / "snap"), str(tmp_path / "delta")
+
+    def count_batches(old, batch_df):
+        fresh = batch_df.withColumn("n_batches", F.lit(1).cast("long"))
+        if old is None:
+            return fresh
+        both = old.unionByName(fresh)
+        return both.groupBy("key").agg(
+            F.max("v").alias("v"),  # v grows batch by batch below
+            F.sum("n_batches").alias("n_batches"),
+        )
+
+    def batch(*kv):
+        return spark.createDataFrame(list(kv), "key string, v long")
+
+    sink = pipelines.snapshot_delta_sink(snap, delta, count_batches)
+    sink(batch(("a", 1), ("b", 1)), 0)
+    sink(batch(("a", 2)), 1)
+    restarted = pipelines.snapshot_delta_sink(snap, delta, count_batches)
+    restarted(batch(("a", 3), ("c", 3)), 2)
+    restarted(batch(("b", 4)), 3)
+    got = {r.key: (r.v, r.n_batches) for r in spark.read.parquet(snap).collect()}
+    assert got == {"a": (3, 3), "b": (4, 2), "c": (3, 1)}
+    assert spark.read.parquet(delta).count() == 6
+
+
+def test_latest_per_key_merge_duplicate_batch_keys(spark):
+    """Duplicate keys inside one batch: every batch row is kept and each
+    old row whose key the batch touches is dropped exactly once — the
+    left-anti join needs no distinct on its key side."""
+    old = spark.createDataFrame(
+        [("a", 0), ("b", 0), ("c", 0)], "key string, v long"
+    )
+    batch_df = spark.createDataFrame(
+        [("a", 1), ("a", 2), ("b", 3), ("b", 3)], "key string, v long"
+    )
+    got = pipelines.latest_per_key_merge(["key"])(old, batch_df).collect()
+    assert sorted((r.key, r.v) for r in got) == [
+        ("a", 1), ("a", 2), ("b", 3), ("b", 3), ("c", 0),
+    ]
