@@ -114,12 +114,6 @@ def parse_tle(line1: str, line2: str) -> dict:
     }
 
 
-def tle_df(spark, tles: list[tuple[str, str]]):
-    """Tiny TLE dim table (S14) from raw element lines — the broadcast
-    side of overpass joins."""
-    return spark.createDataFrame([parse_tle(l1, l2) for l1, l2 in tles])
-
-
 def _sgp4_propagate_np(el: dict, tsince):
     """Vectorized near-Earth SGP4: `el` holds element ARRAYS (one entry
     per output row, already aligned with `tsince` minutes). Returns TEME

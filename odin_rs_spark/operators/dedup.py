@@ -51,19 +51,6 @@ def shingles_from_words(words: Column, n: int = 3) -> Column:
     return F.array_distinct(grams)
 
 
-def word_shingles(text: Column | str, n: int = 3) -> Column:
-    """Distinct n-word shingles of the normalized text (single-space word
-    split on the normalized form, so an identical definition is
-    expressible in ANSI SQL for the oracle). Docs with < n words yield
-    one whole-text shingle.
-
-    Prefer _shingle_df / shingles_from_words in hot paths (see note
-    there about lambda-scope recomputation).
-    """
-    c = F.col(text) if isinstance(text, str) else text
-    return shingles_from_words(F.split(norm_text(c), " "), n)
-
-
 def _shingle_df(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
     """(id, __sh) with words materialized in their own projection."""
     return (

@@ -8,8 +8,6 @@ here pushdown is automatic.
 
 from __future__ import annotations
 
-import datetime as dt
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -18,30 +16,6 @@ def mask_range(df: DataFrame, col: str, lo: float, hi: float) -> DataFrame:
     """F1 — keep rows with col ∈ [lo, hi] (fire-pixel mask semantics,
     odin_goesr/src/lib.rs:513-524)."""
     return df.filter(F.col(col).between(lo, hi))
-
-
-def drop_nan(df: DataFrame, *cols: str) -> DataFrame:
-    """F3 — drop rows where any given double col is NaN or null
-    (odin_goesr/src/lib.rs:548)."""
-    cond = F.lit(True)
-    for c in cols:
-        cond = cond & F.col(c).isNotNull() & ~F.isnan(F.col(c))
-    return df.filter(cond)
-
-
-def age_filter(df: DataFrame, ts_col: str, max_age: dt.timedelta, now: dt.datetime) -> DataFrame:
-    """F4 — drop rows older than now - max_age (odin_bushfire/src/lib.rs:237-293).
-
-    `now` is explicit (no wall-clock in the plan) so replays are
-    deterministic, mirroring the reference's settable SimClock
-    (odin_common/src/sim_clock.rs:52).
-    """
-    return df.filter(F.col(ts_col) >= F.lit(now - max_age))
-
-
-def time_window(df: DataFrame, ts_col: str, start: dt.datetime, end: dt.datetime) -> DataFrame:
-    """F5 — inclusive time-window membership (odin_common/src/datetime.rs:141)."""
-    return df.filter(F.col(ts_col).between(F.lit(start), F.lit(end)))
 
 
 def recode(col: Column | str, mapping: dict, default=None) -> Column:
@@ -57,19 +31,3 @@ def recode(col: Column | str, mapping: dict, default=None) -> Column:
         cond = c == F.lit(value)
         expr = F.when(cond, F.lit(label)) if expr is None else expr.when(cond, F.lit(label))
     return expr.otherwise(F.lit(default))
-
-
-def recode_ranges(col: Column | str, ranges: list[tuple[float, float, str]], default=None) -> Column:
-    """F2 — range-based class recode: [(lo, hi, label), ...] first-match-wins."""
-    c = F.col(col) if isinstance(col, str) else col
-    expr = None
-    for lo, hi, label in ranges:
-        cond = c.between(lo, hi)
-        expr = F.when(cond, F.lit(label)) if expr is None else expr.when(cond, F.lit(label))
-    return expr.otherwise(F.lit(default))
-
-
-def project_wire(df: DataFrame, renames: dict[str, str]) -> DataFrame:
-    """F7 — wire-schema projection: subset + rename in one select
-    (camelCase/epoch-millis serialization, odin_goesr/src/lib.rs:110-124)."""
-    return df.select(*[F.col(src).alias(dst) for src, dst in renames.items()])

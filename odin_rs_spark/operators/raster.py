@@ -62,11 +62,6 @@ def windspeed(u: Column | str, v: Column | str) -> Column:
     return F.sqrt(u * u + v * v)
 
 
-def band_combine(df: DataFrame, out: str, expr: Column) -> DataFrame:
-    """R4 — general per-cell f(bands…) → new band column."""
-    return df.withColumn(out, expr)
-
-
 # --------------------------------------------------------------------------
 # neighborhood machinery shared by R2 / R5
 # --------------------------------------------------------------------------
@@ -134,41 +129,6 @@ def idw_to_grid(
         (F.sum(w * F.col("__v")) / F.sum(w)).alias("idw"),
     )
     return lattice.join(contrib, ["x", "y"], "left")
-
-
-def nearest_to_grid(
-    points: DataFrame,
-    lattice: DataFrame,
-    px: str = "px",
-    py: str = "py",
-    value: str = "value",
-    radius_cells: int = 2,
-) -> DataFrame:
-    """R2 (nearest-neighbor variant) — each lattice cell takes the value
-    of the closest observation within the cell-radius neighborhood; ties
-    broken by value then position for determinism. Same scatter/equi-join
-    shape as idw_to_grid."""
-    cand = _scatter_to_neighbors(
-        points.select(
-            _col(px).alias("__px"), _col(py).alias("__py"), _col(value).alias("__v")
-        ),
-        F.floor(F.col("__px")).cast("int"),
-        F.floor(F.col("__py")).cast("int"),
-        radius_cells,
-    )
-    d2 = (F.col("__px") - F.col("__tx")) ** F.lit(2.0) + (
-        F.col("__py") - F.col("__ty")
-    ) ** F.lit(2.0)
-    ranked = cand.select(
-        F.col("__tx").alias("x"),
-        F.col("__ty").alias("y"),
-        F.struct(
-            d2.alias("d2"), F.col("__v").alias("v"), F.col("__px"), F.col("__py")
-        ).alias("__cand"),
-    )
-    best = ranked.groupBy("x", "y").agg(F.min("__cand").alias("__best"))
-    picked = best.select("x", "y", F.col("__best.v").alias("nn"))
-    return lattice.join(picked, ["x", "y"], "left")
 
 
 # --------------------------------------------------------------------------
@@ -253,45 +213,8 @@ def tile_zip(a: DataFrame, b: DataFrame, value: str = "value") -> DataFrame:
     )
 
 
-def tile_diff(a: DataFrame, b: DataFrame, value: str = "value") -> DataFrame:
-    return tile_zip(a, b, value).withColumn("diff", F.col("a") - F.col("b"))
-
-
 def tile_abs_diff(a: DataFrame, b: DataFrame, value: str = "value") -> DataFrame:
     return tile_zip(a, b, value).withColumn("abs_diff", F.abs(F.col("a") - F.col("b")))
-
-
-def tile_rel_diff(a: DataFrame, b: DataFrame, value: str = "value") -> DataFrame:
-    """|a−b| / max(|a|,|b|), 0 where both zero (tile_data.rs:139-273)."""
-    z = tile_zip(a, b, value)
-    denom = F.greatest(F.abs(F.col("a")), F.abs(F.col("b")))
-    return z.withColumn(
-        "rel_diff",
-        F.when(denom == 0, F.lit(0.0)).otherwise(F.abs(F.col("a") - F.col("b")) / denom),
-    )
-
-
-def tile_scalar(df: DataFrame, value: str = "value", mul: float = 1.0, add: float = 0.0) -> DataFrame:
-    return df.withColumn(value, _col(value) * F.lit(mul) + F.lit(add))
-
-
-def threshold_cells(df: DataFrame, value: str = "value", t: float = 0.0) -> DataFrame:
-    """R8 — cell selection above threshold (tile_data.rs:261-273). The
-    predicate pushes to the scan when `df` is a stored band."""
-    return df.filter(_col(value) >= F.lit(t))
-
-
-def raster_stats(df: DataFrame, value: str = "value") -> DataFrame:
-    """A4/A5 — running image stats (Stats::add, odin_image/src/lib.rs:53-98;
-    TileData::stats tile_data.rs:100-106): one partial-aggregated pass."""
-    v = _col(value)
-    return df.filter(v.isNotNull()).agg(
-        F.count(F.lit(1)).alias("n"),
-        F.avg(v).alias("mean"),
-        F.min(v).alias("min"),
-        F.max(v).alias("max"),
-        F.stddev_pop(v).alias("stddev"),
-    )
 
 
 # --------------------------------------------------------------------------

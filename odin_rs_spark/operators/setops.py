@@ -15,28 +15,3 @@ def tagged_union(dfs: dict[str, DataFrame], source_col: str = "source") -> DataF
         tagged = df.withColumn(source_col, F.lit(name))
         out = tagged if out is None else out.unionByName(tagged, allowMissingColumns=True)
     return out
-
-
-def dedup_by_id(df: DataFrame, id_col: str, order_col: str | None = None) -> DataFrame:
-    """U2 — replace-on-equal-id dedup (odin_sentinel/src/lib.rs:916-921).
-    With order_col, keeps the NEWEST row per id (deterministic); without,
-    Spark's dropDuplicates keeps an arbitrary row."""
-    if order_col is None:
-        return df.dropDuplicates([id_col])
-    from odin_rs_spark.operators.windows import latest_per_key
-
-    return latest_per_key(df, [id_col], order_col)
-
-
-def removed_keys(previous: DataFrame, current: DataFrame, key: str) -> DataFrame:
-    """U3 — stale-key difference → 'removed' list (aircraft drop list,
-    odin_adsb/src/lib.rs:77-101): left-anti join."""
-    return previous.select(key).distinct().join(
-        current.select(key).distinct(), key, "left_anti"
-    )
-
-
-def not_yet_processed(candidates: DataFrame, processed: DataFrame, key: str) -> DataFrame:
-    """U4 — skip-already-retrieved filter (overpass BitSet,
-    odin_orbital/src/lib.rs:326-347): anti-join against the processed set."""
-    return candidates.join(processed.select(key).distinct(), key, "left_anti")

@@ -184,24 +184,6 @@ def bucket_udf(num_planes: int, dim: int, num_tables: int):
     return _buckets
 
 
-def hyperplane_signature(
-    vec: Column, num_planes: int = 16, dim: int = 64, seed: int = 0
-) -> Column:
-    """Single-table deterministic hyperplane sign signature (bucket id).
-
-    JVM HOF form for composability in plain column expressions; the
-    multi-table hot path uses `bucket_udf` instead.
-    """
-    out = F.lit(0).cast("long")
-    for p in range(num_planes):
-        plane = F.array(*[F.lit(plane_component(d, p, seed)) for d in range(dim)])
-        bit = F.when(dot(vec, plane) > 0, F.lit(1 << p).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        )
-        out = out.bitwiseOR(bit)
-    return out
-
-
 def ann_lsh_topk(
     corpus: DataFrame,
     queries: DataFrame,

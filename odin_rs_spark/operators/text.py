@@ -25,15 +25,6 @@ LANG_MARKERS: dict[str, list[str]] = {
 }
 
 
-def marker_hits(text: Column | str, markers: list[str]) -> Column:
-    """Count word-token hits against a marker list (array_intersect-free:
-    counts every occurrence, not distinct)."""
-    c = F.col(text) if isinstance(text, str) else text
-    words = F.split(norm_text(c), " ")
-    marker_arr = F.array(*[F.lit(m) for m in markers])
-    return F.size(F.filter(words, lambda w: F.array_contains(marker_arr, w)))
-
-
 def _lang_hits_udf(markers_by_lang: dict[str, list[str]]):
     """pandas UDF: NORMALIZED text → per-language marker-hit counts in
     one pass over the words (marker → language-index lookup table in the

@@ -12,17 +12,6 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def last_n_global(df: DataFrame, order_col: str, n: int) -> DataFrame:
-    """W1/O3 — newest-N retention without a key (batch ring buffer,
-    GoesrHotspotStore odin_goesr/src/lib.rs:250-277; init_files cut
-    odin_goesr/src/live_importer.rs:112-114).
-
-    orderBy(desc).limit(n) → Spark's TakeOrderedAndProject: per-partition
-    top-n then a single small merge, no full sort.
-    """
-    return df.orderBy(F.col(order_col).desc()).limit(n)
-
-
 def last_n_per_key(
     df: DataFrame, keys: list[str], order_col: str, n: int, tiebreak: list[str] | None = None
 ) -> DataFrame:

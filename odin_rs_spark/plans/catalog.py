@@ -35,6 +35,12 @@ from odin_rs_spark.plans.catalog_lake import *  # noqa: F401,F403
 # editing _CAP_FRONT IS the rotation; the QuerySpec list keeps its
 # historical grouping and does not move.
 #
+# Round 13: the 14 replay consumers that already lead the list are
+# this round's changed code too — split_for_replay writes every chunk
+# in one partitionBy job (same rows, row order and mtime order), all
+# of them read through replay_stream, and q96/q257 upsert with the
+# shared latest_per_key_merge — so the order below stands unchanged.
+#
 # Round-12 allocation (every registered query has now been
 # driver-graded at least once, so changed-code re-grades lead):
 #   slots 1-30:  queries whose operator internals or builders changed
@@ -54,7 +60,8 @@ from odin_rs_spark.plans.catalog_lake import *  # noqa: F401,F403
 # re-verified every round by tests/test_catalog_oracle.py.
 _CAP_FRONT = [
     # r12 changed-code re-grades: streaming replay (split_for_replay
-    # concurrent chunk writes + pinned mtime order)
+    # concurrent chunk writes + pinned mtime order); r13: one-job
+    # split_for_replay, replay_stream reader
     "q257_stream_late_drop",    # also VERDICT #1 re-measured
     "q119_stream_interval_join",  # 2 splits — biggest split win
     "q120_stream_upsert_capped",  # mtime-order regression site (fixed)

@@ -3543,7 +3543,7 @@ def q91_stream_backfill_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from odin_rs_spark.streaming.pipelines import backfill_then_live
-    from odin_rs_spark.streaming.sources import file_stream, split_for_replay
+    from odin_rs_spark.streaming.sources import replay_stream, split_for_replay
 
     ev = _t(spark, sf_dir, "events")
     root = tempfile.mkdtemp(prefix="odin_q91_")
@@ -3551,9 +3551,7 @@ def q91_stream_backfill_live(spark: SparkSession, sf_dir: str) -> DataFrame:
         backfill = ev.filter(F.col("event_id") % 10 < 6)
         live = ev.filter(F.col("event_id") % 10 >= 4)
         split_for_replay(live, root + "/chunks", n_chunks=4, order_col="ts")
-        stream = file_stream(
-            spark, root + "/chunks/chunk_*", ev.schema, max_files_per_trigger=2
-        )
+        stream = replay_stream(spark, root + "/chunks", ev.schema, 2)
         with _stream_state_parallelism(spark, 8):
             backfill_then_live(
                 spark, backfill, stream, root + "/store", root + "/ckpt", "event_id"
@@ -3829,19 +3827,18 @@ def q96_stream_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from odin_rs_spark.streaming.pipelines import (
+        latest_per_key_merge,
         run_available_now,
         snapshot_delta_sink,
         windowed_class_counts,
     )
-    from odin_rs_spark.streaming.sources import file_stream, split_for_replay
+    from odin_rs_spark.streaming.sources import replay_stream, split_for_replay
 
     ev = _t(spark, sf_dir, "events")
     root = tempfile.mkdtemp(prefix="odin_q96_")
     try:
         split_for_replay(ev, root + "/chunks", n_chunks=4, order_col="ts")
-        stream = file_stream(
-            spark, root + "/chunks/chunk_*", ev.schema, max_files_per_trigger=2
-        )
+        stream = replay_stream(spark, root + "/chunks", ev.schema, 2)
         agg = windowed_class_counts(stream, window="1 hour", watermark="2 hours")
 
         # keyed upsert into the SNAPSHOT TABLE (K2), not a driver dict
@@ -3849,16 +3846,10 @@ def q96_stream_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
         # (win_start, class) key; at 100× window cardinality the state
         # stays distributed — the driver only ever sees the final
         # bounded aggregate
-        def merge(old: DataFrame | None, batch_df: DataFrame) -> DataFrame:
-            if old is None:
-                return batch_df
-            keys = ["win_start", "class"]
-            return old.join(
-                batch_df.select(*keys), on=keys, how="left_anti"
-            ).unionByName(batch_df)
-
         sink = snapshot_delta_sink(
-            root + "/snapshot", root + "/delta", merge_fn=merge
+            root + "/snapshot",
+            root + "/delta",
+            latest_per_key_merge(["win_start", "class"]),
         )
         with _stream_state_parallelism(spark, 8):
             run_available_now(agg, sink, root + "/ckpt", output_mode="update")
@@ -4201,7 +4192,7 @@ def q103_stream_ttl_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
         run_available_now,
         snapshot_delta_sink,
     )
-    from odin_rs_spark.streaming.sources import file_stream, split_for_replay
+    from odin_rs_spark.streaming.sources import replay_stream, split_for_replay
     from odin_rs_spark.streaming.state import ttl_latest_state
 
     ev = _t(spark, sf_dir, "events").select(
@@ -4212,9 +4203,7 @@ def q103_stream_ttl_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
     root = tempfile.mkdtemp(prefix="odin_q103_")
     try:
         split_for_replay(ev, root + "/chunks", n_chunks=4, order_col="ts")
-        stream = file_stream(
-            spark, root + "/chunks/chunk_*", ev.schema, max_files_per_trigger=2
-        )
+        stream = replay_stream(spark, root + "/chunks", ev.schema, 2)
         out = ttl_latest_state(stream.groupBy("key"), ttl_ms=None)
 
         # snapshot_delta_sink (not a driver dict): the per-key upsert is
@@ -4418,15 +4407,13 @@ def q108_stream_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from odin_rs_spark.streaming.pipelines import run_available_now
-    from odin_rs_spark.streaming.sources import file_stream, split_for_replay
+    from odin_rs_spark.streaming.sources import replay_stream, split_for_replay
 
     ev = _t(spark, sf_dir, "events").select("user_id", "event_type", "ts")
     root = tempfile.mkdtemp(prefix="odin_q108_")
     try:
         split_for_replay(ev, root + "/chunks", n_chunks=4, order_col="ts")
-        stream = file_stream(
-            spark, root + "/chunks/chunk_*", ev.schema, max_files_per_trigger=2
-        )
+        stream = replay_stream(spark, root + "/chunks", ev.schema, 2)
         dedup = stream.dropDuplicates(["user_id", "event_type"]).select(
             "user_id", "event_type"
         )
@@ -4740,15 +4727,13 @@ def q115_stream_hll_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         run_available_now,
         snapshot_delta_sink,
     )
-    from odin_rs_spark.streaming.sources import file_stream, split_for_replay
+    from odin_rs_spark.streaming.sources import replay_stream, split_for_replay
 
     ev = _t(spark, sf_dir, "events").select("event_type", "user_id", "ts")
     root = tempfile.mkdtemp(prefix="odin_q115_")
     try:
         split_for_replay(ev, root + "/chunks", n_chunks=4, order_col="ts")
-        stream = file_stream(
-            spark, root + "/chunks/chunk_*", ev.schema, max_files_per_trigger=2
-        )
+        stream = replay_stream(spark, root + "/chunks", ev.schema, 2)
 
         # register max-merge as a DISTRIBUTED snapshot upsert (VERDICT
         # r3 "what's wrong" #2): each micro-batch's registers fold into
@@ -4863,7 +4848,7 @@ def q117_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
         run_available_now,
         session_window_counts,
     )
-    from odin_rs_spark.streaming.sources import file_stream, split_for_replay
+    from odin_rs_spark.streaming.sources import replay_stream, split_for_replay
 
     ev = _t(spark, sf_dir, "events").select("user_id", "ts")
     root = tempfile.mkdtemp(prefix="odin_q117_")
@@ -4891,9 +4876,7 @@ def q117_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
         sentinel.coalesce(1).write.mode("overwrite").parquet(
             root + "/chunks/chunk_zz_sentinel"
         )
-        stream = file_stream(
-            spark, root + "/chunks/chunk_*", ev.schema, max_files_per_trigger=2
-        )
+        stream = replay_stream(spark, root + "/chunks", ev.schema, 2)
         sessions = session_window_counts(
             stream, key="user_id", ts_col="ts", gap="30 minutes", watermark="1 minute"
         )
@@ -5047,7 +5030,7 @@ def q119_stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from odin_rs_spark.streaming.joins import interval_join_streams
     from odin_rs_spark.streaming.pipelines import run_available_now
-    from odin_rs_spark.streaming.sources import file_stream, split_for_replay
+    from odin_rs_spark.streaming.sources import replay_stream, split_for_replay
 
     ev = _t(spark, sf_dir, "events")
     purchases = ev.filter(F.col("event_type") == "purchase").select(
@@ -5063,12 +5046,8 @@ def q119_stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         # 2 files/trigger → 2 microbatches per side: still proves
         # cross-batch join-state buffering (pairs span the chunk
         # boundary) at half the per-microbatch state-commit cost
-        lstream = file_stream(
-            spark, root + "/left/chunk_*", purchases.schema, max_files_per_trigger=2
-        )
-        rstream = file_stream(
-            spark, root + "/right/chunk_*", clicks.schema, max_files_per_trigger=2
-        )
+        lstream = replay_stream(spark, root + "/left", purchases.schema, 2)
+        rstream = replay_stream(spark, root + "/right", clicks.schema, 2)
         joined = interval_join_streams(
             lstream,
             rstream,

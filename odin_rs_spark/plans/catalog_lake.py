@@ -732,11 +732,12 @@ def q257_stream_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from odin_rs_spark.streaming.pipelines import (
+        latest_per_key_merge,
         run_available_now,
         snapshot_delta_sink,
         windowed_class_counts,
     )
-    from odin_rs_spark.streaming.sources import file_stream, split_for_replay
+    from odin_rs_spark.streaming.sources import replay_stream, split_for_replay
 
     # arrival order must be UNCORRELATED with event time for late rows
     # to exist (event_id is generated in time order — splitting on it
@@ -751,21 +752,12 @@ def q257_stream_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     root = tempfile.mkdtemp(prefix="odin_q257_")
     try:
         split_for_replay(ev, root + "/chunks", n_chunks=6, order_col="__shuffle")
-        stream = file_stream(
-            spark, root + "/chunks/chunk_*", ev.schema, max_files_per_trigger=2
-        ).drop("__shuffle")
+        stream = replay_stream(spark, root + "/chunks", ev.schema, 2).drop("__shuffle")
         agg = windowed_class_counts(stream, watermark="30 minutes")
-
-        def merge(old: DataFrame | None, batch_df: DataFrame) -> DataFrame:
-            if old is None:
-                return batch_df
-            keys = ["win_start", "win_end", "class"]
-            return old.join(
-                batch_df.select(*keys).distinct(), keys, "left_anti"
-            ).unionByName(batch_df)
-
         sink = snapshot_delta_sink(
-            root + "/snapshot", root + "/delta", merge_fn=merge
+            root + "/snapshot",
+            root + "/delta",
+            latest_per_key_merge(["win_start", "win_end", "class"]),
         )
         with _stream_state_parallelism(spark, 8):
             run_available_now(
@@ -1376,7 +1368,7 @@ def q266_stream_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from odin_rs_spark.streaming.pipelines import run_available_now
-    from odin_rs_spark.streaming.sources import file_stream, split_for_replay
+    from odin_rs_spark.streaming.sources import replay_stream, split_for_replay
 
     ev = _t(spark, sf_dir, "events")
     left = ev.filter(F.col("event_type") == "purchase").select(
@@ -1389,12 +1381,8 @@ def q266_stream_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     try:
         split_for_replay(left, root + "/l", n_chunks=4, order_col="ts")
         split_for_replay(right, root + "/r", n_chunks=4, order_col="r_ts")
-        ls = file_stream(
-            spark, root + "/l/chunk_*", left.schema, max_files_per_trigger=2
-        ).withWatermark("ts", "1 hour")
-        rs = file_stream(
-            spark, root + "/r/chunk_*", right.schema, max_files_per_trigger=2
-        ).withWatermark("r_ts", "1 hour")
+        ls = replay_stream(spark, root + "/l", left.schema, 2).withWatermark("ts", "1 hour")
+        rs = replay_stream(spark, root + "/r", right.schema, 2).withWatermark("r_ts", "1 hour")
         cond = (
             (F.col("user_id") == F.col("r_uid"))
             & (F.col("r_ts") >= F.col("ts") - F.expr("INTERVAL 10 MINUTES"))
@@ -2670,7 +2658,7 @@ def q280_stream_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from odin_rs_spark.streaming.pipelines import run_available_now
-    from odin_rs_spark.streaming.sources import file_stream, split_for_replay
+    from odin_rs_spark.streaming.sources import replay_stream, split_for_replay
 
     ev = _t(spark, sf_dir, "events")
     left = ev.filter(F.col("event_type") == "purchase").select(
@@ -2685,12 +2673,8 @@ def q280_stream_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     try:
         split_for_replay(left, root + "/l", n_chunks=4, order_col="ts")
         split_for_replay(right, root + "/r", n_chunks=4, order_col="r_ts")
-        ls = file_stream(
-            spark, root + "/l/chunk_*", left.schema, max_files_per_trigger=2
-        ).withWatermark("ts", "1 hour")
-        rs = file_stream(
-            spark, root + "/r/chunk_*", right.schema, max_files_per_trigger=2
-        ).withWatermark("r_ts", "1 hour")
+        ls = replay_stream(spark, root + "/l", left.schema, 2).withWatermark("ts", "1 hour")
+        rs = replay_stream(spark, root + "/r", right.schema, 2).withWatermark("r_ts", "1 hour")
         cond = (
             (F.col("user_id") == F.col("r_uid"))
             & (F.col("r_ts") >= F.col("ts") - F.expr("INTERVAL 120 MINUTES"))
@@ -3288,7 +3272,7 @@ def q287_stream_dedup_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from odin_rs_spark.streaming.pipelines import run_available_now
-    from odin_rs_spark.streaming.sources import file_stream, split_for_replay
+    from odin_rs_spark.streaming.sources import replay_stream, split_for_replay
 
     ev = _t(spark, sf_dir, "events").select(
         "event_id", (F.col("user_id") % 50).alias("k"), "ts"
@@ -3297,9 +3281,7 @@ def q287_stream_dedup_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
     root = tempfile.mkdtemp(prefix="odin_q287_")
     try:
         split_for_replay(arr, root + "/c", n_chunks=4, order_col="__arr")
-        st = file_stream(
-            spark, root + "/c/chunk_*", arr.schema, max_files_per_trigger=1
-        )
+        st = replay_stream(spark, root + "/c", arr.schema, 1)
         dd = st.withWatermark("ts", "30 minutes").dropDuplicatesWithinWatermark(
             ["k"]
         )

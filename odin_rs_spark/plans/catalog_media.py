@@ -27,7 +27,7 @@ def q120_stream_upsert_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
         read_snapshot,
         run_available_now,
     )
-    from odin_rs_spark.streaming.sources import file_stream, split_for_replay
+    from odin_rs_spark.streaming.sources import replay_stream, split_for_replay
     from odin_rs_spark.streaming.state import upsert_sorted_capped
 
     ev = _t(spark, sf_dir, "events").select("event_id", "user_id", "ts", "value")
@@ -45,9 +45,7 @@ def q120_stream_upsert_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
         updates.coalesce(1).write.mode("overwrite").parquet(
             root + "/chunks/chunk_zz_updates"
         )
-        stream = file_stream(
-            spark, root + "/chunks/chunk_*", ev.schema, max_files_per_trigger=2
-        )
+        stream = replay_stream(spark, root + "/chunks", ev.schema, 2)
         store = root + "/store"
 
         def upsert(batch_df: DataFrame, batch_id: int) -> None:
@@ -268,15 +266,13 @@ def q123_stream_segment_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         incremental_segment_dedup_sink,
         run_available_now,
     )
-    from odin_rs_spark.streaming.sources import file_stream, split_for_replay
+    from odin_rs_spark.streaming.sources import replay_stream, split_for_replay
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "source", "text")
     root = tempfile.mkdtemp(prefix="odin_q123_")
     try:
         split_for_replay(docs, root + "/chunks", n_chunks=4, order_col="doc_id")
-        stream = file_stream(
-            spark, root + "/chunks/chunk_*", docs.schema, max_files_per_trigger=1
-        )
+        stream = replay_stream(spark, root + "/chunks", docs.schema, 1)
         sink = incremental_segment_dedup_sink(
             root + "/store",
             root + "/stats",

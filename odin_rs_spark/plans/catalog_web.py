@@ -6102,7 +6102,7 @@ def q246_stream_ddsketch(spark: SparkSession, sf_dir: str) -> DataFrame:
         run_available_now,
         snapshot_delta_sink,
     )
-    from odin_rs_spark.streaming.sources import file_stream, split_for_replay
+    from odin_rs_spark.streaming.sources import replay_stream, split_for_replay
 
     ev = (
         _t(spark, sf_dir, "events")
@@ -6112,9 +6112,7 @@ def q246_stream_ddsketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     root = tempfile.mkdtemp(prefix="odin_q246_")
     try:
         split_for_replay(ev, root + "/chunks", n_chunks=4, order_col="ts")
-        stream = file_stream(
-            spark, root + "/chunks/chunk_*", ev.schema, max_files_per_trigger=2
-        )
+        stream = replay_stream(spark, root + "/chunks", ev.schema, 2)
 
         def merge(old: DataFrame | None, batch_df: DataFrame) -> DataFrame:
             sk = ddsketch_build(batch_df, "value", ["event_type"])

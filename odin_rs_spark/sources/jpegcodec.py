@@ -136,10 +136,6 @@ def _fdct(block: np.ndarray) -> np.ndarray:
     return _C @ block @ _C.T
 
 
-def _idct(coef: np.ndarray) -> np.ndarray:
-    return _C.T @ coef @ _C
-
-
 def _build_huffman(spec) -> dict[int, tuple[int, int]]:
     """Spec (BITS, values) → {value: (code, length)} per T.81 C.2."""
     counts, values = spec

@@ -148,7 +148,7 @@ def latest_per_key_merge(key_cols: list[str]):
 def snapshot_delta_sink(
     snapshot_dir: str,
     delta_dir: str,
-    merge_fn=None,
+    merge_fn,
 ):
     """foreachBatch sink maintaining BOTH output modes of the reference
     server (odin_server/src/spa.rs:486-723):
@@ -159,7 +159,7 @@ def snapshot_delta_sink(
       client receives (K2), atomically replaced per batch.
 
     `merge_fn(old_snapshot_df | None, batch_df) -> DataFrame` computes
-    the new snapshot; default = latest batch wins per full overwrite.
+    the new snapshot (e.g. `latest_per_key_merge`).
     Parquet stands in for a transactional table format; on a cluster
     this sink is a Delta MERGE + CDF read, same shape (see
     `atomic_snapshot_swap` for the exact swap point).
@@ -191,13 +191,10 @@ def snapshot_delta_sink(
             .write.mode("append")
             .parquet(delta_dir)
         )
-        if merge_fn is not None:
-            old = read_snapshot(spark, snapshot_dir, snap_schema)
-            new_snap = merge_fn(old, batch_df)
-            atomic_snapshot_swap(new_snap, snapshot_dir)
-            snap_schema = new_snap.schema
-        else:
-            batch_df.write.mode("overwrite").parquet(snapshot_dir)
+        old = read_snapshot(spark, snapshot_dir, snap_schema)
+        new_snap = merge_fn(old, batch_df)
+        atomic_snapshot_swap(new_snap, snapshot_dir)
+        snap_schema = new_snap.schema
 
     return sink
 

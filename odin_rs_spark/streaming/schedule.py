@@ -47,9 +47,3 @@ def next_event(
                 return cand
     # schedule minutes all ≤ now's minute in both hours — next day-hour
     return base + dt.timedelta(hours=2, minutes=schedule_minutes[0], seconds=slack_sec)
-
-
-def histogram_from_rows(rows) -> dict[int, int]:
-    """Adapter: collected rows of (minute, n) — e.g. the output of
-    hourly_minute_histogram for one hour bucket — to a plain dict."""
-    return {int(r[0]): int(r[1]) for r in rows}

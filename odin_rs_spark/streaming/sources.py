@@ -54,61 +54,59 @@ def split_for_replay(
     df: DataFrame, out_dir: str, n_chunks: int, order_col: str
 ) -> list[str]:
     """Materialize a batch table as `n_chunks` time-ordered parquet chunk
-    files for replay through `file_stream` (T11). Chunk i holds the i-th
-    time slice, so maxFilesPerTrigger=1 replays history in event order —
-    the micro-batch analog of the reference's Initialize/Update seam
+    files for replay through `replay_stream` (T11). Chunk i holds the
+    rows of ntile(n_chunks) OVER (ORDER BY order_col) = i, so
+    maxFilesPerTrigger=1 replays history in event order — the
+    micro-batch analog of the reference's Initialize/Update seam
     (odin_goesr/src/live_importer.rs:108-134).
 
-    Driver-side ntile assignment only computes chunk boundaries; rows
-    never collect to the driver.
+    One job writes every chunk: a `partitionBy("__chunk")` write into a
+    sibling staging directory whose `__chunk=i` dirs are then renamed to
+    `out_dir/chunk_{i:04d}`, replacing any earlier chunk of that name.
+    The unpartitioned window leaves the table in one partition, so each
+    chunk is exactly one file; the explicit sort on (__chunk, order_col)
+    meets the writer's required ordering, so Spark adds no sort of its
+    own and rows stay in order_col order. Chunks the write leaves out
+    (fewer rows than chunks, or none) get an empty file with the table's
+    schema, so the replay still runs one micro-batch per chunk.
+
+    The file source orders new files by modification time, so the chunk
+    files get strictly increasing mtimes by chunk index. The stamps sit
+    in the PAST (now - n_chunks .. now - 1 s): callers append files
+    after this returns and rely on them sorting last (q120's update
+    file).
     """
+    import shutil
     import time
-    from concurrent.futures import ThreadPoolExecutor
 
     from pyspark.sql import Window
 
+    staging = os.path.join(
+        os.path.dirname(out_dir), "." + os.path.basename(out_dir) + ".staging"
+    )
     w = Window.orderBy(F.col(order_col).asc())
-    chunked = df.withColumn("__chunk", F.ntile(n_chunks).over(w))
-    # persist across the n_chunks filtered writes: without it every
-    # chunk write re-runs the source scan + global sort (measured ~40%
-    # of several streaming queries' wall at sf0.1)
-    chunked.persist()
-    try:
-        # materialize ONCE before fanning out: concurrent first actions
-        # on an unmaterialized persist would each recompute the scan+sort
-        chunked.count()
-
-        def _write(i: int) -> str:
-            p = os.path.join(out_dir, f"chunk_{i:04d}")
-            chunked.filter(F.col("__chunk") == i).drop("__chunk").coalesce(
-                1
-            ).write.mode("overwrite").parquet(p)
-            return p
-
-        # overlap the independent single-task chunk writes (guide §2.6):
-        # serially each small job's dispatch+commit latency added up to
-        # ~0.1-0.2 s x n_chunks x 2 sides per streaming query. Each write
-        # filters the SAME materialized frame, so file CONTENTS (rows and
-        # row order) are bit-identical to the serial path.
-        with ThreadPoolExecutor(max_workers=min(4, n_chunks)) as pool:
-            paths = list(pool.map(_write, range(1, n_chunks + 1)))
-        # pin replay order explicitly: the file-stream source orders new
-        # files by modification time, which the serial writes implied and
-        # the concurrent writes would leave to scheduling — stamp strictly
-        # increasing mtimes by chunk index so batch composition is exactly
-        # the serial path's, by construction rather than by latency. The
-        # stamps sit strictly in the PAST (now - n_chunks .. now - 1 s):
-        # callers append files AFTER this returns and rely on them
-        # sorting last (q120's update file), which future-dated chunk
-        # stamps would silently break
-        base = time.time() - n_chunks
-        for i, p in enumerate(paths):
-            for name in os.listdir(p):
-                fp = os.path.join(p, name)
-                os.utime(fp, (base + i, base + i))
-        return paths
-    finally:
-        chunked.unpersist()
+    (
+        df.withColumn("__chunk", F.ntile(n_chunks).over(w))
+        .sortWithinPartitions("__chunk", order_col)
+        .write.mode("overwrite")
+        .partitionBy("__chunk")
+        .parquet(staging)
+    )
+    os.makedirs(out_dir, exist_ok=True)
+    paths = [os.path.join(out_dir, f"chunk_{i:04d}") for i in range(1, n_chunks + 1)]
+    for i, p in enumerate(paths, start=1):
+        shutil.rmtree(p, ignore_errors=True)
+        written = os.path.join(staging, f"__chunk={i}")
+        if os.path.isdir(written):
+            os.rename(written, p)
+        else:
+            df.limit(0).coalesce(1).write.parquet(p)
+    shutil.rmtree(staging)
+    base = time.time() - n_chunks
+    for i, p in enumerate(paths):
+        for name in os.listdir(p):
+            os.utime(os.path.join(p, name), (base + i, base + i))
+    return paths
 
 
 def replay_stream(

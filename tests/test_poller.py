@@ -18,6 +18,7 @@ from pyspark.sql.types import (
 
 from odin_rs_spark.streaming.pipelines import (
     classify_events,
+    latest_per_key_merge,
     run_available_now,
     snapshot_delta_sink,
 )
@@ -53,7 +54,7 @@ class FakeFeed:
 
 def _drain(spark, bronze, out, ckpt):
     stream = classify_events(file_stream(spark, bronze + "/batch_*.json", SCHEMA, fmt="json"))
-    sink = snapshot_delta_sink(out + "/snapshot", out + "/delta")
+    sink = snapshot_delta_sink(out + "/snapshot", out + "/delta", latest_per_key_merge(["id"]))
     run_available_now(stream, sink, ckpt, output_mode="append")
 
 
@@ -74,8 +75,8 @@ def test_poller_to_snapshot_end_to_end(spark, tmp_path):
 
     _drain(spark, bronze, out, ckpt)
     snap = spark.read.parquet(out + "/snapshot")
-    # snapshot_delta_sink default keeps the last batch as snapshot; with
-    # availableNow all bronze files arrive as one batch
+    # keyed upsert by id; with availableNow all bronze files arrive as
+    # one batch
     got = {r.id for r in snap.collect()}
     assert got == set(range(1, 36))
     assert "class" in snap.columns
@@ -88,8 +89,9 @@ def test_poller_to_snapshot_end_to_end(spark, tmp_path):
     delta = spark.read.parquet(out + "/delta")
     assert delta.count() == 40  # 35 in batch 0 + 5 in batch 1, no dupes
     assert delta.groupBy("id").count().filter(F.col("count") > 1).count() == 0
+    # the upsert keeps the first drain's ids and adds the new ones
     snap2 = {r.id for r in spark.read.parquet(out + "/snapshot").collect()}
-    assert snap2 == set(range(36, 41))
+    assert snap2 == set(range(1, 41))
 
 
 def test_poller_crash_between_rename_and_state_write(tmp_path):

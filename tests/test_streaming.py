@@ -57,6 +57,89 @@ def test_replay_preserves_rows(spark, events_small, replay_root, tmp_path):
     assert sum(n for _, n in got) == events_small.count()
 
 
+def _replay_batch_sizes(spark, df, root, ckpt) -> list[int]:
+    sizes: dict[int, int] = {}
+    pipelines.run_available_now(
+        sources.replay_stream(spark, root, df.schema),
+        lambda d, bid: sizes.__setitem__(bid, d.count()),
+        ckpt,
+        output_mode="append",
+    )
+    return [sizes[b] for b in sorted(sizes)]
+
+
+def _chunk_files(root: str) -> list[list[str]]:
+    """Data files per chunk dir, in chunk order (hidden/marker files skipped)."""
+    return [
+        sorted(
+            os.path.join(root, d, f)
+            for f in os.listdir(os.path.join(root, d))
+            if not f.startswith((".", "_"))
+        )
+        for d in sorted(os.listdir(root))
+        if d.startswith("chunk_")
+    ]
+
+
+def test_split_for_replay_keeps_empty_chunks(spark, tmp_path):
+    """Fewer rows than chunks: every chunk still lands as one file, so
+    the replay runs one micro-batch per chunk, the empty ones included."""
+    t0 = dt.datetime(2024, 1, 1)
+    df = spark.createDataFrame(
+        [Row(ts=t0, v=1), Row(ts=t0 + dt.timedelta(seconds=1), v=2)]
+    )
+    root = str(tmp_path / "chunks")
+    sources.split_for_replay(df, root, n_chunks=4, order_col="ts")
+    files = _chunk_files(root)
+    assert len(files) == 4 and all(len(f) == 1 for f in files)
+    sizes = _replay_batch_sizes(spark, df, root, str(tmp_path / "ckpt"))
+    assert sizes == [1, 1, 0, 0]
+
+
+def test_split_for_replay_empty_table(spark, tmp_path):
+    df = spark.createDataFrame([], "ts timestamp, v long")
+    root = str(tmp_path / "chunks")
+    sources.split_for_replay(df, root, n_chunks=3, order_col="ts")
+    assert [len(f) for f in _chunk_files(root)] == [1, 1, 1]
+    sizes = _replay_batch_sizes(spark, df, root, str(tmp_path / "ckpt"))
+    assert sizes == [0, 0, 0]
+
+
+def test_split_for_replay_chunks_are_ntile_in_order(spark, tmp_path):
+    """Chunk i holds exactly the rows of ntile(n) OVER (ORDER BY col) = i,
+    in col order, and chunk files carry strictly increasing past mtimes
+    (the file source replays by mtime)."""
+    import time
+
+    n_rows, n_chunks = 50, 4
+    df = spark.range(n_rows).select(
+        ((F.col("id") * 37) % n_rows).alias("x"), F.col("id").alias("v")
+    )
+    root = str(tmp_path / "chunks")
+    paths = sources.split_for_replay(df, root, n_chunks=n_chunks, order_col="x")
+    assert paths == [os.path.join(root, f"chunk_{i:04d}") for i in range(1, n_chunks + 1)]
+
+    # ntile: the first n_rows % n_chunks buckets hold one extra row
+    base, extra = divmod(n_rows, n_chunks)
+    rows = sorted(((i * 37) % n_rows, i) for i in range(n_rows))
+    expected, start = [], 0
+    for b in range(n_chunks):
+        size = base + (1 if b < extra else 0)
+        expected.append(rows[start : start + size])
+        start += size
+
+    files = _chunk_files(root)
+    assert all(len(f) == 1 for f in files)
+    got = [
+        [(r.x, r.v) for r in spark.read.parquet(f[0]).collect()] for f in files
+    ]
+    assert got == expected
+
+    mtimes = [os.path.getmtime(f[0]) for f in files]
+    assert mtimes == sorted(mtimes) and len(set(mtimes)) == n_chunks
+    assert mtimes[-1] < time.time()
+
+
 def test_windowed_class_counts_matches_batch(spark, events_small, replay_root, tmp_path):
     stream = _replay(spark, events_small, replay_root)
     agg = pipelines.windowed_class_counts(stream)
