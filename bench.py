@@ -18,12 +18,10 @@ import os
 import sys
 import time
 
-import pandas as pd
-
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from odin_rs_spark.plans.catalog import CATALOG
-from odin_rs_spark.session import get_spark
+from odin_rs_spark.session import get_spark, warm_workers
 
 
 def run_query(df) -> None:
@@ -36,42 +34,10 @@ def main() -> None:
     spark = get_spark(app_name="odin_rs_spark-bench")
     spark.sparkContext.setLogLevel("ERROR")
 
-    # warm the JVM/session and the Python-UDF worker pool so the first
-    # query of each kind doesn't absorb process-startup cost (the pool
-    # spins up one worker per core on first pandas-UDF use: ~6 s on 32
-    # cores that would otherwise be billed to one arbitrary query)
-    spark.range(1000).selectExpr("sum(id)").collect()
-    from pyspark.sql import functions as F
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("long")
-    def _warm(s: pd.Series) -> pd.Series:
-        return s
-
-    spark.range(100000).repartition(64).select(F.sum(_warm(F.col("id")))).collect()
-
-    # pre-import the heavy modules the decode/multimodal kernels use in
-    # the SAME pooled workers (VERDICT r11 #7): with
-    # spark.python.worker.reuse (the default) each worker pays the
-    # numpy + codec-module import chain exactly once, and without this
-    # warm pass that one-time process cost lands in whichever decode
-    # query a worker first serves (q206's five-codec union measured
-    # 87 s executor vs 2 s CPU on a cold pool). Same class of warm-up
-    # as the pool spin-up above — per-process fixed cost, not query
-    # work; the imports are cheap no-ops on every later call.
-    @pandas_udf("long")
-    def _warm_imports(s: pd.Series) -> pd.Series:
-        import numpy  # noqa: F401
-        import odin_rs_spark.operators.multimodal  # noqa: F401
-        import odin_rs_spark.sources.officedoc  # noqa: F401
-        import odin_rs_spark.sources.pdfcodec  # noqa: F401
-        import odin_rs_spark.sources.warc  # noqa: F401
-
-        return s
-
-    spark.range(100000).repartition(64).select(
-        F.sum(_warm_imports(F.col("id")))
-    ).collect()
+    # warm the JVM/session, the Python-UDF worker pool and the decode
+    # modules inside it, so the first query of each kind isn't billed for
+    # per-process startup
+    warm_workers(spark)
     # touch the parquet datasource once (footer reader, vectorized scan
     # classes, Hadoop FS init) so the catalog's first query isn't billed
     # for framework class-loading
@@ -83,12 +49,16 @@ def main() -> None:
     # two sessions burned re-measuring before concluding VM noise).
     # Shuffle + agg + a pandas-UDF leg so it tracks the same resources
     # the catalog queries use. min-of-3 like the queries themselves.
+    from pyspark.sql import functions as F
+
+    ident = F.pandas_udf(lambda s: s, "long")
+
     def _calibrate() -> float:
         best = float("inf")
         for _ in range(3):
             t0 = time.perf_counter()
             spark.range(2_000_000).repartition(64).select(
-                F.sum(_warm(F.col("id"))).alias("s"),
+                F.sum(ident("id")).alias("s"),
                 F.count(F.lit(1)).alias("n"),
             ).collect()
             best = min(best, time.perf_counter() - t0)

@@ -329,6 +329,7 @@ def pmi_collocations(
     top = scored.orderBy(
         F.col("pmi").desc(), F.col("w1").asc(), F.col("w2").asc()
     ).limit(k)
+    # unpartitioned, but bounded: it numbers the k rows left after the limit
     w = Window.orderBy(F.col("pmi").desc(), F.col("w1").asc(), F.col("w2").asc())
     return top.withColumn("rank", F.row_number().over(w)).select(
         "rank", "w1", "w2", "c12", "pmi"

@@ -96,6 +96,7 @@ def cumulative_cdf(df: DataFrame, bin_col: str, count_col: str = "n") -> DataFra
     # (ROWS would assign tied rows arbitrary, order-dependent partial
     # sums) — and SQL's default frame for `sum() OVER (ORDER BY bin)` is
     # RANGE, so this is also what the oracle computes
+    # unpartitioned, but bounded: one row per histogram bin, not per event
     w = Window.orderBy(F.col(bin_col).asc()).rangeBetween(Window.unboundedPreceding, 0)
     total = Window.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     return df.withColumn("cum", F.sum(count_col).over(w)).withColumn(

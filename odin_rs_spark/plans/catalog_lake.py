@@ -5412,11 +5412,12 @@ def q308_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     with _stream_state_parallelism(spark, 8):
         ranked = integer_pagerank(edges, iterations=4)
-    w = Window.orderBy(F.col("mass").desc(), F.col("node").asc())
-    return (
-        ranked.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= 15)
-        .select("rank", F.col("node").alias("keyword"), "mass")
+    # take the top 15 first and number only those: `node` is unique, so
+    # the order is total and the window sees 15 rows, not every node
+    order = [F.col("mass").desc(), F.col("node").asc()]
+    top = ranked.orderBy(*order).limit(15)
+    return top.withColumn("rank", F.row_number().over(Window.orderBy(*order))).select(
+        "rank", F.col("node").alias("keyword"), "mass"
     )
 
 

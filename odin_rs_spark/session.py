@@ -9,6 +9,14 @@ deploys to a 1000-executor cluster unchanged:
   (DateTime<Utc> everywhere, odin_common/src/datetime.rs) and the DuckDB
   oracle (UTC-naive timestamps).
 - Arrow enabled for the few Pandas-UDF operators (vectorized transfer).
+- Local masters list files on the driver. Above
+  `spark.sql.sources.parallelPartitionDiscovery.threshold` paths (Spark's
+  default is 32) `InMemoryFileIndex` lists them in a distributed job, one
+  task per path. A file-stream batch re-resolves its new files as explicit
+  paths, so a live batch over 60 one-tick files paid that job inside
+  `getBatch`. On `local[...]` the tasks run on the driver's own cores: the
+  job adds scheduling and CPU, no parallelism. Cluster masters keep Spark's
+  default, since object-store listing does gain from executor parallelism.
 """
 
 from __future__ import annotations
@@ -55,6 +63,10 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
     )
+    if master == "local" or master.startswith("local["):
+        builder = builder.config(
+            "spark.sql.sources.parallelPartitionDiscovery.threshold", str(2**31 - 1)
+        )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
@@ -67,3 +79,39 @@ def get_spark(
 
     ensure_shipped(spark)
     return spark
+
+
+def warm_workers(spark: SparkSession) -> None:
+    """Start the pandas-UDF worker pool and pre-import the decode modules
+    in it, so the first query of each kind is not billed for per-process
+    fixed cost.
+
+    The pool starts one Python worker per core on first pandas-UDF use
+    (~6 s on 32 cores). With `spark.python.worker.reuse` (the default)
+    each pooled worker then pays the numpy + codec-module import chain
+    once: on a cold pool that lands in whichever decode query a worker
+    first serves (q206's five-codec union measured 87 s executor time
+    against 2 s CPU). Opt-in: `get_spark` does not call it, so callers
+    that time their own warm-up keep that cost where they measure it.
+    """
+    from pyspark.sql import functions as F
+
+    from odin_rs_spark.deploy import ensure_shipped
+
+    ensure_shipped(spark)  # the workers import the package below
+
+    def _warm_imports(s):  # no hints: this module has postponed annotations
+        import numpy  # noqa: F401
+        import odin_rs_spark.operators.multimodal  # noqa: F401
+        import odin_rs_spark.sources.officedoc  # noqa: F401
+        import odin_rs_spark.sources.pdfcodec  # noqa: F401
+        import odin_rs_spark.sources.warc  # noqa: F401
+
+        return s
+
+    spark.range(1000).selectExpr("sum(id)").collect()
+    # one pandas-UDF job over more tasks than cores: it starts the pool
+    # and runs the imports in every pooled worker
+    spark.range(100000).repartition(64).select(
+        F.sum(F.pandas_udf(_warm_imports, "long")("id"))
+    ).collect()

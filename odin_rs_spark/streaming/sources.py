@@ -31,7 +31,13 @@ def file_stream(
 ) -> DataFrame:
     """Incremental file listing source (S1/S6 semantics). At 100 TB the
     listing cost is bounded by partition-path layout (source/yyyy/ddd/hh
-    in the reference, =partition dirs here) — pass a glob that prunes."""
+    in the reference, =partition dirs here) — pass a glob that prunes.
+
+    Each micro-batch re-resolves its new files as explicit paths in
+    `getBatch`, so a batch over more files than
+    `spark.sql.sources.parallelPartitionDiscovery.threshold` pays a
+    distributed listing job; `get_spark` raises that threshold on local
+    masters so such batches list on the driver."""
     try:
         # parquet isAdjustedToUTC=0 must stream as TIMESTAMP (LTZ), not NTZ:
         # withWatermark and window() require TIMESTAMP (session TZ is UTC so

@@ -6,6 +6,7 @@ deterministically."""
 from __future__ import annotations
 
 import datetime as dt
+import json
 import os
 
 import pandas as pd
@@ -801,4 +802,72 @@ def test_latest_per_key_merge_duplicate_batch_keys(spark):
     got = pipelines.latest_per_key_merge(["key"])(old, batch_df).collect()
     assert sorted((r.key, r.v) for r in got) == [
         ("a", 1), ("a", 2), ("b", 3), ("b", 3), ("c", 0),
+    ]
+
+
+def _listing_jobs(spark) -> set[int]:
+    """Ids of the jobs Spark's file index launched to list paths in
+    parallel (their description starts with "Listing leaf files")."""
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty()
+    jobs = sc.statusStore().jobsList(None)
+    out = set()
+    for i in range(jobs.size()):
+        desc = jobs.apply(i).description()
+        if desc.isDefined() and desc.get().startswith("Listing leaf files"):
+            out.add(jobs.apply(i).jobId())
+    return out
+
+
+@pytest.mark.parametrize("n_paths", [40])
+def test_local_session_lists_many_paths_on_the_driver(spark, tmp_path, n_paths):
+    """More paths than Spark's parallel-discovery default (32), read by a
+    local session, launch no distributed listing job: neither a file-stream
+    batch over that many new files (its getBatch re-resolves them as
+    explicit paths) nor a batch read over that many paths."""
+    # (a) one availableNow batch over n_paths JSON bronze files
+    bronze = tmp_path / "bronze"
+    bronze.mkdir()
+    recs = [
+        {"key": f"k{i % 7}", "ts_us": 1_700_000_000_000_000 + i, "lat": i / 2, "lon": -i / 4}
+        for i in range(3 * n_paths)
+    ]
+    for f in range(n_paths):
+        with open(bronze / f"part_{f:04d}.json", "w") as fh:
+            fh.writelines(json.dumps(r) + "\n" for r in recs[3 * f : 3 * f + 3])
+    stream = sources.file_stream(
+        spark, str(bronze), "key string, ts_us bigint, lat double, lon double", fmt="json"
+    ).select("key", F.timestamp_micros("ts_us").alias("ts"), "lat", "lon")
+    snap, delta = str(tmp_path / "snap"), str(tmp_path / "delta")
+    before = _listing_jobs(spark)
+    pipelines.run_available_now(
+        state.position_store_state(stream.groupBy("key")),
+        pipelines.snapshot_delta_sink(
+            snap, delta, pipelines.latest_per_key_merge(["key"])
+        ),
+        str(tmp_path / "ckpt"),
+    )
+    assert _listing_jobs(spark) - before == set()
+    assert spark.read.parquet(delta).select("__batch_id").distinct().count() == 1
+    pdf = pd.DataFrame(recs)
+    latest = pdf.sort_values("ts_us").groupby("key").tail(1).set_index("key")
+    counts = pdf.groupby("key").size()
+    want = {k: (r.ts_us, r.lat, r.lon, counts[k]) for k, r in latest.iterrows()}
+    snapshot = spark.read.parquet(snap).select(
+        "key", F.unix_micros("ts").alias("ts_us"), "lat", "lon", "n_updates"
+    )
+    got = {r.key: (r.ts_us, r.lat, r.lon, r.n_updates) for r in snapshot.collect()}
+    assert got == want
+
+    # (b) a batch read over n_paths parquet files
+    paths = []
+    for f in range(n_paths):
+        p = str(tmp_path / f"t_{f:04d}.parquet")
+        pd.DataFrame({"f": [f, f], "v": [2 * f, 2 * f + 1]}).to_parquet(p)
+        paths.append(p)
+    before = _listing_jobs(spark)
+    rows = spark.read.parquet(*paths).collect()
+    assert _listing_jobs(spark) - before == set()
+    assert sorted((r.f, r.v) for r in rows) == [
+        (f, v) for f in range(n_paths) for v in (2 * f, 2 * f + 1)
     ]

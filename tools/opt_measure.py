@@ -22,33 +22,17 @@ from contextlib import redirect_stdout
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import pandas as pd  # noqa: E402
-
-
-def _warm(spark) -> None:
-    from pyspark.sql import functions as F
-    from pyspark.sql.functions import pandas_udf
-
-    spark.range(1000).selectExpr("sum(id)").collect()
-
-    @pandas_udf("long")
-    def _w(s: pd.Series) -> pd.Series:
-        return s
-
-    spark.range(100000).repartition(64).select(F.sum(_w(F.col("id")))).collect()
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    spark.read.parquet(os.path.join(sf_dir, "region.parquet")).count()
-
 
 def main() -> None:
     from odin_rs_spark.plans.catalog import CATALOG
-    from odin_rs_spark.session import get_spark
+    from odin_rs_spark.session import get_spark, warm_workers
 
     mode = sys.argv[1]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark(app_name="odin_rs_spark-opt")
     spark.sparkContext.setLogLevel("ERROR")
-    _warm(spark)
+    warm_workers(spark)
+    spark.read.parquet(os.path.join(sf_dir, "region.parquet")).count()
 
     if mode == "time":
         names = sys.argv[2:]
