@@ -35,6 +35,13 @@ from odin_rs_spark.plans.catalog_lake import *  # noqa: F401,F403
 # editing _CAP_FRONT IS the rotation; the QuerySpec list keeps its
 # historical grouping and does not move.
 #
+# Round 14: every temp-dir query now runs through qshared's
+# _scratch_query (one mkdtemp/rmtree, result materialized by an eager
+# localCheckpoint instead of collect + createDataFrame), so all 21 are
+# changed code. The 16 that already lead keep their slots; q273, q277,
+# q286, q301 and q133 follow, then q264 (one lazy plan instead of seven
+# build-phase actions), all ahead of q135.
+#
 # Round 13: the 14 replay consumers that already lead the list are
 # this round's changed code too — split_for_replay writes every chunk
 # in one partitionBy job (same rows, row order and mtime order), all
@@ -79,6 +86,13 @@ _CAP_FRONT = [
     # drain_polling_source empty-feed pass (behavior unchanged at n>0)
     "q118_rest_source_ingest",
     "q319_gpshub_ingest",
+    # r14 _scratch_query conversions not already above, then q264
+    "q273_goes_stream_flagship",
+    "q277_mixed_granule_lake",
+    "q286_satellite_classify",
+    "q301_avro_stream_ingest",
+    "q133_dem_tile_heights",
+    "q264_fk_conformance",
     # BPE train restructure (one corpus pass, lazy round checkpoints)
     "q135_bpe_train",
     "q139_bpe_encode",

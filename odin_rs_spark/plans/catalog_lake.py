@@ -727,10 +727,8 @@ FROM hits
 # --------------------------------------------------------------------------
 
 
-def q257_stream_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
+@_scratch_query
+def q257_stream_late_drop(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
     from odin_rs_spark.streaming.pipelines import (
         latest_per_key_merge,
         run_available_now,
@@ -749,27 +747,22 @@ def q257_stream_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events").withColumn(
         "__shuffle", F.md5(F.col("event_id").cast("string"))
     )
-    root = tempfile.mkdtemp(prefix="odin_q257_")
-    try:
-        split_for_replay(ev, root + "/chunks", n_chunks=6, order_col="__shuffle")
-        stream = replay_stream(spark, root + "/chunks", ev.schema, 2).drop("__shuffle")
-        agg = windowed_class_counts(stream, watermark="30 minutes")
-        sink = snapshot_delta_sink(
-            root + "/snapshot",
-            root + "/delta",
-            latest_per_key_merge(["win_start", "win_end", "class"]),
+    split_for_replay(ev, root + "/chunks", n_chunks=6, order_col="__shuffle")
+    stream = replay_stream(spark, root + "/chunks", ev.schema, 2).drop("__shuffle")
+    agg = windowed_class_counts(stream, watermark="30 minutes")
+    sink = snapshot_delta_sink(
+        root + "/snapshot",
+        root + "/delta",
+        latest_per_key_merge(["win_start", "win_end", "class"]),
+    )
+    with _stream_state_parallelism(spark, 8):
+        run_available_now(
+            agg, sink, root + "/ckpt", output_mode="update"
         )
-        with _stream_state_parallelism(spark, 8):
-            run_available_now(
-                agg, sink, root + "/ckpt", output_mode="update"
-            )
-        out = spark.read.parquet(root + "/snapshot").select(
-            "win_start", "win_end", "class", "n", "sum_value"
-        )
-        rows = out.collect()
-        return spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    out = spark.read.parquet(root + "/snapshot").select(
+        "win_start", "win_end", "class", "n", "sum_value"
+    )
+    return out
 
 
 Q257_SQL = """
@@ -1206,10 +1199,12 @@ FROM r GROUP BY event_type
 # q264 — referential-integrity conformance (the Deequ-style FK audit
 # completing q255's profiling: orphaned foreign keys across the
 # star schema — lineitem→orders, orders→customer, customer→nation —
-# counted by LEFT ANTI joins on the key dims; TPC-H data is
-# conformant by construction, so violations are SEEDED (every 97th
-# orders row gets a custkey pushed past the dim) and the audit must
-# count exactly those).
+# counted by LEFT joins on the key dims (parent keys are unique, so a
+# NULL parent key marks exactly one orphan); TPC-H data is conformant
+# by construction, so violations are SEEDED (every 97th orders row
+# gets a custkey pushed past the dim) and the audit must count exactly
+# those). One lazy plan: the seed offset joins in as a 1-row
+# aggregate, so building the query launches no job.
 # --------------------------------------------------------------------------
 
 
@@ -1218,29 +1213,26 @@ def q264_fk_conformance(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     cust = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
     nation = _t(spark, sf_dir, "nation").select("n_nationkey")
-    maxc = cust.agg(F.max("c_custkey")).collect()[0][0]
-    seeded = orders.select(
+    seeded = orders.crossJoin(cust.agg(F.max("c_custkey").alias("__maxc"))).select(
         "o_orderkey",
         F.when(
-            F.col("o_orderkey") % 97 == 0, F.col("o_custkey") + F.lit(maxc)
+            F.col("o_orderkey") % 97 == 0, F.col("o_custkey") + F.col("__maxc")
         ).otherwise(F.col("o_custkey")).alias("o_custkey"),
     )
 
     def audit(child, key, parent, pkey, label):
-        n = child.count()
-        orphans = child.join(
-            parent, child[key] == parent[pkey], "left_anti"
-        ).count()
-        return (label, n, orphans)
+        return child.join(parent, F.col(key) == F.col(pkey), "left").agg(
+            F.lit(label).alias("fk"),
+            F.count(F.lit(1)).alias("n_child"),
+            F.sum(F.col(pkey).isNull().cast("bigint")).alias("n_orphans"),
+        )
 
-    rows = [
+    fks = [
         audit(li, "l_orderkey", orders, "o_orderkey", "lineitem->orders"),
         audit(seeded, "o_custkey", cust, "c_custkey", "orders->customer"),
         audit(cust, "c_nationkey", nation, "n_nationkey", "customer->nation"),
     ]
-    return spark.createDataFrame(
-        rows, "fk string, n_child bigint, n_orphans bigint"
-    )
+    return fks[0].unionByName(fks[1]).unionByName(fks[2])
 
 
 Q264_SQL = """
@@ -1363,11 +1355,12 @@ FROM w
 # --------------------------------------------------------------------------
 
 
-def q266_stream_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
-    from odin_rs_spark.streaming.pipelines import run_available_now
+@_scratch_query
+def q266_stream_left_outer(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
+    from odin_rs_spark.streaming.pipelines import (
+        partitioned_append_sink,
+        run_available_now,
+    )
     from odin_rs_spark.streaming.sources import replay_stream, split_for_replay
 
     ev = _t(spark, sf_dir, "events")
@@ -1377,39 +1370,30 @@ def q266_stream_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     right = ev.filter(F.col("event_type") == "click").select(
         F.col("user_id").alias("r_uid"), F.col("ts").alias("r_ts")
     )
-    root = tempfile.mkdtemp(prefix="odin_q266_")
-    try:
-        split_for_replay(left, root + "/l", n_chunks=4, order_col="ts")
-        split_for_replay(right, root + "/r", n_chunks=4, order_col="r_ts")
-        ls = replay_stream(spark, root + "/l", left.schema, 2).withWatermark("ts", "1 hour")
-        rs = replay_stream(spark, root + "/r", right.schema, 2).withWatermark("r_ts", "1 hour")
-        cond = (
-            (F.col("user_id") == F.col("r_uid"))
-            & (F.col("r_ts") >= F.col("ts") - F.expr("INTERVAL 10 MINUTES"))
-            & (F.col("r_ts") <= F.col("ts"))
-        )
-        j = ls.join(rs, cond, "left_outer")
+    split_for_replay(left, root + "/l", n_chunks=4, order_col="ts")
+    split_for_replay(right, root + "/r", n_chunks=4, order_col="r_ts")
+    ls = replay_stream(spark, root + "/l", left.schema, 2).withWatermark("ts", "1 hour")
+    rs = replay_stream(spark, root + "/r", right.schema, 2).withWatermark("r_ts", "1 hour")
+    cond = (
+        (F.col("user_id") == F.col("r_uid"))
+        & (F.col("r_ts") >= F.col("ts") - F.expr("INTERVAL 10 MINUTES"))
+        & (F.col("r_ts") <= F.col("ts"))
+    )
+    j = ls.join(rs, cond, "left_outer")
 
-        def append_store(batch_df: DataFrame, batch_id: int) -> None:
-            batch_df.write.mode("append").parquet(root + "/store")
-
-        with _stream_state_parallelism(spark, 8):
-            run_available_now(
-                j, append_store, root + "/ckpt", output_mode="append"
-            )
-        out = (
-            spark.read.parquet(root + "/store")
-            .groupBy((F.col("user_id") % 7).alias("user_bucket"))
-            .agg(
-                F.count(F.lit(1)).alias("n_rows"),
-                F.sum(F.col("r_ts").isNotNull().cast("bigint")).alias("n_pairs"),
-                F.sum(F.col("r_ts").isNull().cast("bigint")).alias("n_nulls"),
-            )
+    sink = partitioned_append_sink(root + "/store")
+    with _stream_state_parallelism(spark, 8):
+        run_available_now(j, sink, root + "/ckpt", output_mode="append")
+    out = (
+        spark.read.parquet(root + "/store")
+        .groupBy((F.col("user_id") % 7).alias("user_bucket"))
+        .agg(
+            F.count(F.lit(1)).alias("n_rows"),
+            F.sum(F.col("r_ts").isNotNull().cast("bigint")).alias("n_pairs"),
+            F.sum(F.col("r_ts").isNull().cast("bigint")).alias("n_nulls"),
         )
-        rows = out.collect()
-        return spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    )
+    return out
 
 
 Q266_SQL = """
@@ -2006,10 +1990,9 @@ FROM scored GROUP BY pred
 # that existed separately since r3 — nothing chained them until now.
 # --------------------------------------------------------------------------
 
-def q273_goes_stream_flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
+@_scratch_query
+def q273_goes_stream_flagship(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
     import os as _os
-    import shutil
-    import tempfile
 
     import numpy as np
 
@@ -2023,126 +2006,121 @@ def q273_goes_stream_flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     ensure_shipped(spark)
-    root = tempfile.mkdtemp(prefix="odin_q273_")
-    try:
-        gdir = root + "/granules"
-        _os.makedirs(gdir)
-        xx, yy = np.meshgrid(np.arange(16), np.arange(12))
-        for g in range(4):
-            write_hdf5(
-                gdir + f"/goes_g{g}.nc",
-                [("y", 12), ("x", 16)],
-                {
-                    "CMI": (["y", "x"],
-                            ((xx * 37 + yy * 23 + g * 7) % 89).astype("<i2")),
-                    "DQF": (["y", "x"],
-                            ((xx * 7 + yy * 11 + g) % 4).astype("<i1")),
-                },
-                chunks={"CMI": (6, 8)},
-                compress={"CMI": 6},
-                var_attrs={"CMI": {"scale_factor": np.float64(0.5),
-                                   "add_offset": np.float64(-12.0)}},
-            )
-        stream = (
-            spark.readStream.format("binaryFile")
-            .schema(
-                "path string, modificationTime timestamp,"
-                " length bigint, content binary"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .option("pathGlobFilter", "*.nc")
-            .load(gdir)
+    gdir = root + "/granules"
+    _os.makedirs(gdir)
+    xx, yy = np.meshgrid(np.arange(16), np.arange(12))
+    for g in range(4):
+        write_hdf5(
+            gdir + f"/goes_g{g}.nc",
+            [("y", 12), ("x", 16)],
+            {
+                "CMI": (["y", "x"],
+                        ((xx * 37 + yy * 23 + g * 7) % 89).astype("<i2")),
+                "DQF": (["y", "x"],
+                        ((xx * 7 + yy * 11 + g) % 4).astype("<i1")),
+            },
+            chunks={"CMI": (6, 8)},
+            compress={"CMI": 6},
+            var_attrs={"CMI": {"scale_factor": np.float64(0.5),
+                               "add_offset": np.float64(-12.0)}},
         )
-        # the fixed-grid window (|x_rad| ≤ 0.024, |y_rad| ≤ 0.018 around
-        # lon0=-75) maps into a small lon/lat box, so prune the global
-        # 0.5° lattice to it BEFORE the stream starts and persist: the
-        # broadcast side is then ~400 cells instead of 259k rebuilt on
-        # every micro-batch (partition pruning on the dim — the same
-        # values the oracle's full-lattice join produces)
-        dem = (
-            spark.range(720 * 360)
-            .select(
-                ((F.col("id") % 720) - 360).cast("int").alias("cx"),
-                ((F.col("id") / 720).cast("int") - 180).alias("cy"),
-            )
-            .withColumn(
-                "elev_m",
-                ((F.col("cx") * 7 + F.col("cy") * 13) % 3000).cast("double"),
-            )
-            .filter(
-                F.col("cx").between(-170, -130) & F.col("cy").between(-15, 15)
-            )
-            .persist()
+    stream = (
+        spark.readStream.format("binaryFile")
+        .schema(
+            "path string, modificationTime timestamp,"
+            " length bigint, content binary"
         )
-        dem.count()  # materialize once, before the per-batch broadcasts
-
-        def transform(batch_df: DataFrame) -> DataFrame:
-            cells = hdf5_grid_cells(
-                batch_df, "CMI", mask_var="DQF", mask_min=2.0
-            )
-            classed = cells.withColumn(
-                "pixel_class",
-                F.when(F.col("mask") == 2, "good").otherwise("medium"),
-            ).withColumn(
-                "xr", F.lit(-0.024) + F.col("x") * F.lit(0.003)
-            ).withColumn(
-                "yr", F.lit(-0.018) + F.col("y") * F.lit(0.003)
-            )
-            geo = classed.withColumn(
-                "g", proj.goes_to_lonlat("xr", "yr", -75.0)
-            ).filter(F.col("g.lon").isNotNull())
-            enriched = geo.join(
-                F.broadcast(dem),
-                (quantize_cell(F.col("g.lon"), 0.5) == F.col("cx"))
-                & (quantize_cell(F.col("g.lat"), 0.5) == F.col("cy")),
-                "left",
-            )
-            # additive per-batch metrics (merge = sum, finalize at read)
-            return enriched.groupBy("pixel_class").agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum("value").alias("sum_cmi"),
-                F.sum(F.round(F.col("g.lat"), 6)).alias("sum_lat"),
-                F.sum("elev_m").alias("sum_elev"),
-            )
-
-        def merge_totals(old: DataFrame | None, batch: DataFrame) -> DataFrame:
-            both = batch if old is None else old.unionByName(batch)
-            return both.groupBy("pixel_class").agg(
-                F.sum("n").alias("n"),
-                F.sum("sum_cmi").alias("sum_cmi"),
-                F.sum("sum_lat").alias("sum_lat"),
-                F.sum("sum_elev").alias("sum_elev"),
-            )
-
-        base_sink = snapshot_delta_sink(
-            root + "/snap", root + "/delta", merge_fn=merge_totals
+        .option("maxFilesPerTrigger", 1)
+        .option("pathGlobFilter", "*.nc")
+        .load(gdir)
+    )
+    # the fixed-grid window (|x_rad| ≤ 0.024, |y_rad| ≤ 0.018 around
+    # lon0=-75) maps into a small lon/lat box, so prune the global
+    # 0.5° lattice to it BEFORE the stream starts and persist: the
+    # broadcast side is then ~400 cells instead of 259k rebuilt on
+    # every micro-batch (partition pruning on the dim — the same
+    # values the oracle's full-lattice join produces)
+    dem = (
+        spark.range(720 * 360)
+        .select(
+            ((F.col("id") % 720) - 360).cast("int").alias("cx"),
+            ((F.col("id") / 720).cast("int") - 180).alias("cy"),
         )
-
-        def sink_fn(batch_df: DataFrame, batch_id: int) -> None:
-            base_sink(transform(batch_df), batch_id)
-
-        with _stream_state_parallelism(spark, 8):
-            run_available_now(stream, sink_fn, root + "/ckpt",
-                              output_mode="append")
-
-        snap = spark.read.parquet(root + "/snap")
-        delta = spark.read.parquet(root + "/delta")
-        batches = delta.groupBy("pixel_class").agg(
-            F.countDistinct("__batch_id").cast("bigint").alias("n_batches")
+        .withColumn(
+            "elev_m",
+            ((F.col("cx") * 7 + F.col("cy") * 13) % 3000).cast("double"),
         )
-        out = snap.join(batches, "pixel_class").select(
+        .filter(
+            F.col("cx").between(-170, -130) & F.col("cy").between(-15, 15)
+        )
+        .persist()
+    )
+    dem.count()  # materialize once, before the per-batch broadcasts
+
+    def transform(batch_df: DataFrame) -> DataFrame:
+        cells = hdf5_grid_cells(
+            batch_df, "CMI", mask_var="DQF", mask_min=2.0
+        )
+        classed = cells.withColumn(
             "pixel_class",
-            F.col("n").cast("bigint").alias("n"),
-            F.round("sum_cmi", 6).alias("sum_cmi"),
-            F.round("sum_lat", 3).alias("sum_lat"),
-            F.round(F.col("sum_elev") / F.col("n"), 4).alias("avg_elev_m"),
-            "n_batches",
+            F.when(F.col("mask") == 2, "good").otherwise("medium"),
+        ).withColumn(
+            "xr", F.lit(-0.024) + F.col("x") * F.lit(0.003)
+        ).withColumn(
+            "yr", F.lit(-0.018) + F.col("y") * F.lit(0.003)
         )
-        rows = out.collect()  # materialize before the temp store vanishes
-        dem.unpersist()
-        return spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+        geo = classed.withColumn(
+            "g", proj.goes_to_lonlat("xr", "yr", -75.0)
+        ).filter(F.col("g.lon").isNotNull())
+        enriched = geo.join(
+            F.broadcast(dem),
+            (quantize_cell(F.col("g.lon"), 0.5) == F.col("cx"))
+            & (quantize_cell(F.col("g.lat"), 0.5) == F.col("cy")),
+            "left",
+        )
+        # additive per-batch metrics (merge = sum, finalize at read)
+        return enriched.groupBy("pixel_class").agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum("value").alias("sum_cmi"),
+            F.sum(F.round(F.col("g.lat"), 6)).alias("sum_lat"),
+            F.sum("elev_m").alias("sum_elev"),
+        )
+
+    def merge_totals(old: DataFrame | None, batch: DataFrame) -> DataFrame:
+        both = batch if old is None else old.unionByName(batch)
+        return both.groupBy("pixel_class").agg(
+            F.sum("n").alias("n"),
+            F.sum("sum_cmi").alias("sum_cmi"),
+            F.sum("sum_lat").alias("sum_lat"),
+            F.sum("sum_elev").alias("sum_elev"),
+        )
+
+    base_sink = snapshot_delta_sink(
+        root + "/snap", root + "/delta", merge_fn=merge_totals
+    )
+
+    def sink_fn(batch_df: DataFrame, batch_id: int) -> None:
+        base_sink(transform(batch_df), batch_id)
+
+    with _stream_state_parallelism(spark, 8):
+        run_available_now(stream, sink_fn, root + "/ckpt",
+                          output_mode="append")
+
+    snap = spark.read.parquet(root + "/snap")
+    delta = spark.read.parquet(root + "/delta")
+    batches = delta.groupBy("pixel_class").agg(
+        F.countDistinct("__batch_id").cast("bigint").alias("n_batches")
+    )
+    out = snap.join(batches, "pixel_class").select(
+        "pixel_class",
+        F.col("n").cast("bigint").alias("n"),
+        F.round("sum_cmi", 6).alias("sum_cmi"),
+        F.round("sum_lat", 3).alias("sum_lat"),
+        F.round(F.col("sum_elev") / F.col("n"), 4).alias("avg_elev_m"),
+        "n_batches",
+    )
+    dem.unpersist()
+    return out
 
 
 def _q273_sql() -> str:
@@ -2398,10 +2376,9 @@ FROM c WHERE value >= 0.0 GROUP BY xb
 # so the oracle regenerates all four families analytically.
 # --------------------------------------------------------------------------
 
-def q277_mixed_granule_lake(spark: SparkSession, sf_dir: str) -> DataFrame:
+@_scratch_query
+def q277_mixed_granule_lake(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
     import os as _os
-    import shutil
-    import tempfile
 
     import numpy as np
 
@@ -2415,66 +2392,61 @@ def q277_mixed_granule_lake(spark: SparkSession, sf_dir: str) -> DataFrame:
     from odin_rs_spark.sources.netcdf3 import write_netcdf3
 
     ensure_shipped(spark)
-    root = tempfile.mkdtemp(prefix="odin_q277_")
-    try:
-        xx, yy = np.meshgrid(np.arange(16), np.arange(12))
-        for g in (0, 1):
-            write_netcdf3(
-                _os.path.join(root, f"cdf_g{g}.nc"),
-                dims=[("y", 12), ("x", 16)],
-                variables={
-                    "v": (["y", "x"],
-                          ((xx * 5 + yy * 7 + g * 3) % 50).astype("<f8"))
-                },
-            )
-        for g in (2, 3):
-            write_hdf5(
-                _os.path.join(root, f"h5_g{g}.nc"),
-                dims=[("y", 12), ("x", 16)],
-                variables={
-                    "v": (["y", "x"],
-                          ((xx * 11 + yy * 3 + g) % 40).astype("<i2"))
-                },
-                chunks={"v": (6, 8)},
-                compress={"v": 6},
-            )
-        gx, gy = np.meshgrid(np.arange(24), np.arange(20))
-        write_grib2(
-            _os.path.join(root, "gs_g4.grib2"),
-            ((gx * 2 + gy * 5 + 4) % 30) * 0.25,
-            lat0=30.0, lon0=-100.0, dlat=0.125, dlon=0.25,
-            e_scale=-2, nbits=7,
+    xx, yy = np.meshgrid(np.arange(16), np.arange(12))
+    for g in (0, 1):
+        write_netcdf3(
+            _os.path.join(root, f"cdf_g{g}.nc"),
+            dims=[("y", 12), ("x", 16)],
+            variables={
+                "v": (["y", "x"],
+                      ((xx * 5 + yy * 7 + g * 3) % 50).astype("<f8"))
+            },
         )
-        write_grib2_jpeg2000(
-            _os.path.join(root, "gj_g5.grib2"),
-            ((gx * 3 + gy * 2 + 5) % 30) * 0.25,
-            lat0=30.0, lon0=-100.0, dlat=0.125, dlon=0.25,
-            e_scale=-2, nbits=7, levels=2,
+    for g in (2, 3):
+        write_hdf5(
+            _os.path.join(root, f"h5_g{g}.nc"),
+            dims=[("y", 12), ("x", 16)],
+            variables={
+                "v": (["y", "x"],
+                      ((xx * 11 + yy * 3 + g) % 40).astype("<i2"))
+            },
+            chunks={"v": (6, 8)},
+            compress={"v": 6},
         )
-        files = spark.read.format("binaryFile").load(root)
-        fmt = F.regexp_extract(F.col("path"), r"([a-z0-9]+)_g\d+\.", 1)
-        nc_cells = nc_grid_cells_any(
-            files.filter(F.col("path").endswith(".nc")), "v"
-        ).select(
-            F.regexp_extract("path", r"([a-z0-9]+)_g\d+\.", 1).alias("fmt"),
-            "value",
-        )
-        gb_cells = grib2_grid_cells(
-            files.filter(F.col("path").endswith(".grib2"))
-        ).select(
-            F.regexp_extract("path", r"([a-z0-9]+)_g\d+\.", 1).alias("fmt"),
-            "value",
-        )
-        out = nc_cells.unionByName(gb_cells).groupBy("fmt").agg(
-            F.count(F.lit(1)).alias("n_cells"),
-            F.round(F.sum("value"), 6).alias("sum_value"),
-            F.round(F.min("value"), 6).alias("min_value"),
-            F.round(F.max("value"), 6).alias("max_value"),
-        )
-        rows = out.collect()  # materialize before the lake is deleted
-        return spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    gx, gy = np.meshgrid(np.arange(24), np.arange(20))
+    write_grib2(
+        _os.path.join(root, "gs_g4.grib2"),
+        ((gx * 2 + gy * 5 + 4) % 30) * 0.25,
+        lat0=30.0, lon0=-100.0, dlat=0.125, dlon=0.25,
+        e_scale=-2, nbits=7,
+    )
+    write_grib2_jpeg2000(
+        _os.path.join(root, "gj_g5.grib2"),
+        ((gx * 3 + gy * 2 + 5) % 30) * 0.25,
+        lat0=30.0, lon0=-100.0, dlat=0.125, dlon=0.25,
+        e_scale=-2, nbits=7, levels=2,
+    )
+    files = spark.read.format("binaryFile").load(root)
+    fmt = F.regexp_extract(F.col("path"), r"([a-z0-9]+)_g\d+\.", 1)
+    nc_cells = nc_grid_cells_any(
+        files.filter(F.col("path").endswith(".nc")), "v"
+    ).select(
+        F.regexp_extract("path", r"([a-z0-9]+)_g\d+\.", 1).alias("fmt"),
+        "value",
+    )
+    gb_cells = grib2_grid_cells(
+        files.filter(F.col("path").endswith(".grib2"))
+    ).select(
+        F.regexp_extract("path", r"([a-z0-9]+)_g\d+\.", 1).alias("fmt"),
+        "value",
+    )
+    out = nc_cells.unionByName(gb_cells).groupBy("fmt").agg(
+        F.count(F.lit(1)).alias("n_cells"),
+        F.round(F.sum("value"), 6).alias("sum_value"),
+        F.round(F.min("value"), 6).alias("min_value"),
+        F.round(F.max("value"), 6).alias("max_value"),
+    )
+    return out
 
 
 Q277_SQL = """
@@ -2653,11 +2625,12 @@ FROM m GROUP BY label
 # cleanup in a future Spark flips this red.
 # --------------------------------------------------------------------------
 
-def q280_stream_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
-    from odin_rs_spark.streaming.pipelines import run_available_now
+@_scratch_query
+def q280_stream_full_outer(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
+    from odin_rs_spark.streaming.pipelines import (
+        partitioned_append_sink,
+        run_available_now,
+    )
     from odin_rs_spark.streaming.sources import replay_stream, split_for_replay
 
     ev = _t(spark, sf_dir, "events")
@@ -2669,48 +2642,39 @@ def q280_stream_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("user_id").alias("r_uid"),
         F.col("ts").alias("r_ts"),
     )
-    root = tempfile.mkdtemp(prefix="odin_q280_")
-    try:
-        split_for_replay(left, root + "/l", n_chunks=4, order_col="ts")
-        split_for_replay(right, root + "/r", n_chunks=4, order_col="r_ts")
-        ls = replay_stream(spark, root + "/l", left.schema, 2).withWatermark("ts", "1 hour")
-        rs = replay_stream(spark, root + "/r", right.schema, 2).withWatermark("r_ts", "1 hour")
-        cond = (
-            (F.col("user_id") == F.col("r_uid"))
-            & (F.col("r_ts") >= F.col("ts") - F.expr("INTERVAL 120 MINUTES"))
-            & (F.col("r_ts") <= F.col("ts"))
-        )
-        j = ls.join(rs, cond, "full_outer")
+    split_for_replay(left, root + "/l", n_chunks=4, order_col="ts")
+    split_for_replay(right, root + "/r", n_chunks=4, order_col="r_ts")
+    ls = replay_stream(spark, root + "/l", left.schema, 2).withWatermark("ts", "1 hour")
+    rs = replay_stream(spark, root + "/r", right.schema, 2).withWatermark("r_ts", "1 hour")
+    cond = (
+        (F.col("user_id") == F.col("r_uid"))
+        & (F.col("r_ts") >= F.col("ts") - F.expr("INTERVAL 120 MINUTES"))
+        & (F.col("r_ts") <= F.col("ts"))
+    )
+    j = ls.join(rs, cond, "full_outer")
 
-        def append_store(batch_df: DataFrame, batch_id: int) -> None:
-            batch_df.write.mode("append").parquet(root + "/store")
-
-        with _stream_state_parallelism(spark, 8):
-            run_available_now(
-                j, append_store, root + "/ckpt", output_mode="append"
-            )
-        st = spark.read.parquet(root + "/store")
-        out = st.groupBy(
-            (F.coalesce(F.col("user_id"), F.col("r_uid")) % 7).alias(
-                "user_bucket"
-            )
-        ).agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.sum(
-                (F.col("event_id").isNotNull()
-                 & F.col("r_eid").isNotNull()).cast("bigint")
-            ).alias("n_pairs"),
-            F.sum(F.col("r_eid").isNull().cast("bigint")).alias(
-                "n_left_only"
-            ),
-            F.sum(F.col("event_id").isNull().cast("bigint")).alias(
-                "n_right_only"
-            ),
+    sink = partitioned_append_sink(root + "/store")
+    with _stream_state_parallelism(spark, 8):
+        run_available_now(j, sink, root + "/ckpt", output_mode="append")
+    st = spark.read.parquet(root + "/store")
+    out = st.groupBy(
+        (F.coalesce(F.col("user_id"), F.col("r_uid")) % 7).alias(
+            "user_bucket"
         )
-        rows = out.collect()
-        return spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    ).agg(
+        F.count(F.lit(1)).alias("n_rows"),
+        F.sum(
+            (F.col("event_id").isNotNull()
+             & F.col("r_eid").isNotNull()).cast("bigint")
+        ).alias("n_pairs"),
+        F.sum(F.col("r_eid").isNull().cast("bigint")).alias(
+            "n_left_only"
+        ),
+        F.sum(F.col("event_id").isNull().cast("bigint")).alias(
+            "n_right_only"
+        ),
+    )
+    return out
 
 
 Q280_SQL = """
@@ -3100,10 +3064,9 @@ FROM rec
 # → dense head → argmax with zero tolerance.
 # --------------------------------------------------------------------------
 
-def q286_satellite_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
+@_scratch_query
+def q286_satellite_classify(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
     import os as _os
-    import shutil
-    import tempfile
 
     import numpy as np
 
@@ -3120,66 +3083,61 @@ def q286_satellite_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
         "cnn_1x16x16_4f_3.onnx",
     )
     weights = load_onnx_cnn(fixture)
-    root = tempfile.mkdtemp(prefix="odin_q286_")
-    try:
-        xx, yy = np.meshgrid(np.arange(16), np.arange(16))
-        for g in range(24):
-            cmi = ((xx * (g % 5 + 1) + yy * (g % 3 + 1) + g * 17) % 200)
-            # per-granule DQF modulus varies the clean share (2/3,
-            # 1/2, 2/5, 1/3) so the cloudy-granule gate REALLY skips
-            dqf = ((xx * 7 + yy * 11 + g) % (3 + g % 4))
-            write_hdf5(
-                root + f"/t_g{g}.nc",
-                [("y", 16), ("x", 16)],
-                {"CMI": (["y", "x"], cmi.astype("<i2")),
-                 "DQF": (["y", "x"], dqf.astype("<i1"))},
-                chunks={"CMI": (8, 8)},
-                compress={"CMI": 6},
-            )
-        files = spark.read.format("binaryFile").load(root)
-
-        import pandas as pd
-
-        def fn(batches):
-            from odin_rs_spark.functions.cnn import classify_pixels
-            from odin_rs_spark.sources.hdf5 import parse_hdf5
-
-            for pdf in batches:
-                rows = {"gran": [], "good_share": [], "pred": [],
-                        "margin": []}
-                ids, grays, shares = [], [], []
-                for path, content in zip(pdf["path"], pdf["content"]):
-                    nc = parse_hdf5(bytes(content))
-                    cmi = np.asarray(nc["vars"]["CMI"]["data"])
-                    dqf = np.asarray(nc["vars"]["DQF"]["data"])
-                    share = float((dqf < 2).mean())
-                    gran = int(path.rsplit("_g", 1)[1].split(".")[0])
-                    if share < 0.375:  # cloudy granule: skip classify
-                        continue
-                    ids.append((gran, share))
-                    grays.append(cmi.astype(np.uint8))
-                if ids:
-                    pred, margin = classify_pixels(np.stack(grays), weights)
-                    for (gran, share), p, m in zip(ids, pred, margin):
-                        rows["gran"].append(gran)
-                        rows["good_share"].append(share)
-                        rows["pred"].append(int(p))
-                        rows["margin"].append(float(m))
-                yield pd.DataFrame(rows)
-
-        scored = files.select("path", "content").mapInPandas(
-            fn, "gran int, good_share double, pred int, margin double"
+    xx, yy = np.meshgrid(np.arange(16), np.arange(16))
+    for g in range(24):
+        cmi = ((xx * (g % 5 + 1) + yy * (g % 3 + 1) + g * 17) % 200)
+        # per-granule DQF modulus varies the clean share (2/3,
+        # 1/2, 2/5, 1/3) so the cloudy-granule gate REALLY skips
+        dqf = ((xx * 7 + yy * 11 + g) % (3 + g % 4))
+        write_hdf5(
+            root + f"/t_g{g}.nc",
+            [("y", 16), ("x", 16)],
+            {"CMI": (["y", "x"], cmi.astype("<i2")),
+             "DQF": (["y", "x"], dqf.astype("<i1"))},
+            chunks={"CMI": (8, 8)},
+            compress={"CMI": 6},
         )
-        out = scored.groupBy("pred").agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_granules"),
-            F.round(F.avg("margin"), 6).alias("avg_margin"),
-            F.round(F.avg("good_share"), 6).alias("avg_good_share"),
-            F.min("gran").cast("int").alias("first_gran"),
-        )
-        rows = out.collect()
-        return spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    files = spark.read.format("binaryFile").load(root)
+
+    import pandas as pd
+
+    def fn(batches):
+        from odin_rs_spark.functions.cnn import classify_pixels
+        from odin_rs_spark.sources.hdf5 import parse_hdf5
+
+        for pdf in batches:
+            rows = {"gran": [], "good_share": [], "pred": [],
+                    "margin": []}
+            ids, grays, shares = [], [], []
+            for path, content in zip(pdf["path"], pdf["content"]):
+                nc = parse_hdf5(bytes(content))
+                cmi = np.asarray(nc["vars"]["CMI"]["data"])
+                dqf = np.asarray(nc["vars"]["DQF"]["data"])
+                share = float((dqf < 2).mean())
+                gran = int(path.rsplit("_g", 1)[1].split(".")[0])
+                if share < 0.375:  # cloudy granule: skip classify
+                    continue
+                ids.append((gran, share))
+                grays.append(cmi.astype(np.uint8))
+            if ids:
+                pred, margin = classify_pixels(np.stack(grays), weights)
+                for (gran, share), p, m in zip(ids, pred, margin):
+                    rows["gran"].append(gran)
+                    rows["good_share"].append(share)
+                    rows["pred"].append(int(p))
+                    rows["margin"].append(float(m))
+            yield pd.DataFrame(rows)
+
+    scored = files.select("path", "content").mapInPandas(
+        fn, "gran int, good_share double, pred int, margin double"
+    )
+    out = scored.groupBy("pred").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_granules"),
+        F.round(F.avg("margin"), 6).alias("avg_margin"),
+        F.round(F.avg("good_share"), 6).alias("avg_good_share"),
+        F.min("gran").cast("int").alias("first_gran"),
+    )
+    return out
 
 
 Q286_SQL = """
@@ -3267,45 +3225,37 @@ GROUP BY s.pred
 # in a future Spark flips this red.
 # --------------------------------------------------------------------------
 
-def q287_stream_dedup_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
-    from odin_rs_spark.streaming.pipelines import run_available_now
+@_scratch_query
+def q287_stream_dedup_ttl(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
+    from odin_rs_spark.streaming.pipelines import (
+        partitioned_append_sink,
+        run_available_now,
+    )
     from odin_rs_spark.streaming.sources import replay_stream, split_for_replay
 
     ev = _t(spark, sf_dir, "events").select(
         "event_id", (F.col("user_id") % 50).alias("k"), "ts"
     )
     arr = ev.withColumn("__arr", F.md5(F.col("event_id").cast("string")))
-    root = tempfile.mkdtemp(prefix="odin_q287_")
-    try:
-        split_for_replay(arr, root + "/c", n_chunks=4, order_col="__arr")
-        st = replay_stream(spark, root + "/c", arr.schema, 1)
-        dd = st.withWatermark("ts", "30 minutes").dropDuplicatesWithinWatermark(
-            ["k"]
-        )
+    split_for_replay(arr, root + "/c", n_chunks=4, order_col="__arr")
+    st = replay_stream(spark, root + "/c", arr.schema, 1)
+    dd = st.withWatermark("ts", "30 minutes").dropDuplicatesWithinWatermark(
+        ["k"]
+    )
 
-        def sink(batch_df: DataFrame, batch_id: int) -> None:
-            batch_df.withColumn("__b", F.lit(batch_id)).write.mode(
-                "append"
-            ).parquet(root + "/store")
-
-        with _stream_state_parallelism(spark, 8):
-            run_available_now(dd, sink, root + "/ckpt", output_mode="append")
-        out = (
-            spark.read.parquet(root + "/store")
-            .groupBy((F.col("__b") + 1).cast("int").alias("batch"))
-            .agg(
-                F.count(F.lit(1)).cast("bigint").alias("n_emitted"),
-                F.min("k").cast("bigint").alias("min_k"),
-                F.max("k").cast("bigint").alias("max_k"),
-            )
+    sink = partitioned_append_sink(root + "/store")
+    with _stream_state_parallelism(spark, 8):
+        run_available_now(dd, sink, root + "/ckpt", output_mode="append")
+    out = (
+        spark.read.parquet(root + "/store")
+        .groupBy((F.col("__batch_id") + 1).cast("int").alias("batch"))
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_emitted"),
+            F.min("k").cast("bigint").alias("min_k"),
+            F.max("k").cast("bigint").alias("max_k"),
         )
-        rows = out.collect()
-        return spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    )
+    return out
 
 
 Q287_SQL = """
@@ -4552,10 +4502,9 @@ Q300_SQL = _q300_sql()
 # discipline).
 # --------------------------------------------------------------------------
 
-def q301_avro_stream_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
+@_scratch_query
+def q301_avro_stream_ingest(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
     import os as _os
-    import shutil
-    import tempfile
 
     from odin_rs_spark.deploy import ensure_shipped
     from odin_rs_spark.sources.avrocodec import avro_records, encode_avro
@@ -4565,111 +4514,103 @@ def q301_avro_stream_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     ensure_shipped(spark)
-    root = tempfile.mkdtemp(prefix="odin_q301_")
-    try:
-        adir = root + "/inbox"
-        _os.makedirs(adir)
-        # identical formula records to the committed q291 fixtures
-        import json as _json
+    adir = root + "/inbox"
+    _os.makedirs(adir)
+    # identical formula records to the committed q291 fixtures
+    import json as _json
 
-        schema = _json.dumps(
-            {
-                "type": "record",
-                "name": "Event",
-                "fields": [
-                    {"name": "id", "type": "long"},
-                    {"name": "ts", "type": "long"},
-                    {"name": "kind", "type": "string"},
-                    {"name": "value", "type": ["null", "double"]},
-                    {"name": "flag", "type": "boolean"},
-                    {"name": "tags",
-                     "type": {"type": "array", "items": "string"}},
-                ],
-            }
-        )
-        for f, codec in enumerate(["null", "deflate", "zstandard", "snappy"]):
-            recs = []
-            for i in range(400):
-                gid = f * 400 + i
-                recs.append(
-                    {
-                        "id": gid,
-                        "ts": 1700000000 + gid * 60,
-                        "kind": ["click", "view", "purchase"][gid % 3],
-                        "value": None if gid % 11 == 0 else (gid % 97) * 0.25,
-                        "flag": gid % 2 == 0,
-                        "tags": [f"t{(gid + j) % 7}" for j in range(gid % 4)],
-                    }
-                )
-            with open(f"{adir}/events_{codec}.avro", "wb") as fh:
-                fh.write(encode_avro(schema, recs, codec=codec))
-        stream = (
-            spark.readStream.format("binaryFile")
-            .schema(
-                "path string, modificationTime timestamp,"
-                " length bigint, content binary"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .option("pathGlobFilter", "*.avro")
-            .load(adir)
-        )
-
-        def transform(batch_df: DataFrame) -> DataFrame:
-            recs = avro_records(
-                batch_df,
+    schema = _json.dumps(
+        {
+            "type": "record",
+            "name": "Event",
+            "fields": [
+                {"name": "id", "type": "long"},
+                {"name": "ts", "type": "long"},
+                {"name": "kind", "type": "string"},
+                {"name": "value", "type": ["null", "double"]},
+                {"name": "flag", "type": "boolean"},
+                {"name": "tags",
+                 "type": {"type": "array", "items": "string"}},
+            ],
+        }
+    )
+    for f, codec in enumerate(["null", "deflate", "zstandard", "snappy"]):
+        recs = []
+        for i in range(400):
+            gid = f * 400 + i
+            recs.append(
                 {
-                    "id": "bigint",
-                    "kind": "string",
-                    "value": "double",
-                    "tags": "array<string>",
-                },
+                    "id": gid,
+                    "ts": 1700000000 + gid * 60,
+                    "kind": ["click", "view", "purchase"][gid % 3],
+                    "value": None if gid % 11 == 0 else (gid % 97) * 0.25,
+                    "flag": gid % 2 == 0,
+                    "tags": [f"t{(gid + j) % 7}" for j in range(gid % 4)],
+                }
             )
-            return recs.groupBy("kind").agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum(F.col("value").isNull().cast("int")).alias("n_null"),
-                F.sum("value").alias("sum_value"),
-                F.sum(F.size("tags")).alias("sum_tags"),
-            )
+        with open(f"{adir}/events_{codec}.avro", "wb") as fh:
+            fh.write(encode_avro(schema, recs, codec=codec))
+    stream = (
+        spark.readStream.format("binaryFile")
+        .schema(
+            "path string, modificationTime timestamp,"
+            " length bigint, content binary"
+        )
+        .option("maxFilesPerTrigger", 1)
+        .option("pathGlobFilter", "*.avro")
+        .load(adir)
+    )
 
-        def merge_totals(old: DataFrame | None, batch: DataFrame) -> DataFrame:
-            both = batch if old is None else old.unionByName(batch)
-            return both.groupBy("kind").agg(
-                F.sum("n").alias("n"),
-                F.sum("n_null").alias("n_null"),
-                F.sum("sum_value").alias("sum_value"),
-                F.sum("sum_tags").alias("sum_tags"),
-            )
-
-        base_sink = snapshot_delta_sink(
-            root + "/snap", root + "/delta", merge_fn=merge_totals
+    def transform(batch_df: DataFrame) -> DataFrame:
+        recs = avro_records(
+            batch_df,
+            {
+                "id": "bigint",
+                "kind": "string",
+                "value": "double",
+                "tags": "array<string>",
+            },
+        )
+        return recs.groupBy("kind").agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum(F.col("value").isNull().cast("int")).alias("n_null"),
+            F.sum("value").alias("sum_value"),
+            F.sum(F.size("tags")).alias("sum_tags"),
         )
 
-        def sink_fn(batch_df: DataFrame, batch_id: int) -> None:
-            base_sink(transform(batch_df), batch_id)
-
-        with _stream_state_parallelism(spark, 8):
-            run_available_now(stream, sink_fn, root + "/ckpt",
-                              output_mode="append")
-
-        snap = spark.read.parquet(root + "/snap")
-        delta = spark.read.parquet(root + "/delta")
-        batches = delta.groupBy("kind").agg(
-            F.countDistinct("__batch_id").cast("bigint").alias("n_batches")
+    def merge_totals(old: DataFrame | None, batch: DataFrame) -> DataFrame:
+        both = batch if old is None else old.unionByName(batch)
+        return both.groupBy("kind").agg(
+            F.sum("n").alias("n"),
+            F.sum("n_null").alias("n_null"),
+            F.sum("sum_value").alias("sum_value"),
+            F.sum("sum_tags").alias("sum_tags"),
         )
-        return (
-            snap.join(batches, "kind")
-            .select(
-                "kind",
-                F.col("n").cast("bigint").alias("n"),
-                F.col("n_null").cast("bigint").alias("n_null"),
-                F.round("sum_value", 6).alias("sum_value"),
-                F.col("sum_tags").cast("bigint").alias("sum_tags"),
-                "n_batches",
-            )
-            .localCheckpoint()
-        )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+
+    base_sink = snapshot_delta_sink(
+        root + "/snap", root + "/delta", merge_fn=merge_totals
+    )
+
+    def sink_fn(batch_df: DataFrame, batch_id: int) -> None:
+        base_sink(transform(batch_df), batch_id)
+
+    with _stream_state_parallelism(spark, 8):
+        run_available_now(stream, sink_fn, root + "/ckpt",
+                          output_mode="append")
+
+    snap = spark.read.parquet(root + "/snap")
+    delta = spark.read.parquet(root + "/delta")
+    batches = delta.groupBy("kind").agg(
+        F.countDistinct("__batch_id").cast("bigint").alias("n_batches")
+    )
+    return snap.join(batches, "kind").select(
+        "kind",
+        F.col("n").cast("bigint").alias("n"),
+        F.col("n_null").cast("bigint").alias("n_null"),
+        F.round("sum_value", 6).alias("sum_value"),
+        F.col("sum_tags").cast("bigint").alias("sum_tags"),
+        "n_batches",
+    )
 
 
 Q301_SQL = """
@@ -6467,10 +6408,9 @@ FROM (VALUES
 # per-device state survived every micro-batch boundary.
 # --------------------------------------------------------------------------
 
-def q319_gpshub_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
+@_scratch_query
+def q319_gpshub_ingest(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
     import glob
-    import shutil
-    import tempfile
 
     from odin_rs_spark.streaming.datasource import (
         drain_polling_source,
@@ -6493,66 +6433,61 @@ def q319_gpshub_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.lit(35.0) + (F.col("event_id") % 2048) * F.lit(1.0 / 1024)).alias("lat"),
         (F.lit(-100.0) + (F.col("event_id") % 4096) * F.lit(1.0 / 2048)).alias("lon"),
     )
-    root = tempfile.mkdtemp(prefix="odin_q319_")
-    try:
-        feed_dir = root + "/feed"
-        feed.coalesce(1).write.mode("overwrite").json(feed_dir)
-        feed_file = glob.glob(feed_dir + "/part-*")[0]
-        # one job for both scalars the query needs from events (row count
-        # for the poll budget, clock max for the staleness cutoff)
-        n, max_ts = ev.agg(F.count(F.lit(1)), F.max("ts")).collect()[0]
-        batch_limit = max(1, -(-n // 2))  # exactly 2 polls
-        register_rest_source(spark)
-        ddl = ("id BIGINT, device STRING, ts_us BIGINT, "
-               "lat DOUBLE, lon DOUBLE")
+    feed_dir = root + "/feed"
+    feed.coalesce(1).write.mode("overwrite").json(feed_dir)
+    feed_file = glob.glob(feed_dir + "/part-*")[0]
+    # one job for both scalars the query needs from events (row count
+    # for the poll budget, clock max for the staleness cutoff)
+    n, max_ts = ev.agg(F.count(F.lit(1)), F.max("ts")).collect()[0]
+    batch_limit = max(1, -(-n // 2))  # exactly 2 polls
+    register_rest_source(spark)
+    ddl = ("id BIGINT, device STRING, ts_us BIGINT, "
+           "lat DOUBLE, lon DOUBLE")
 
-        snap, delta = root + "/snapshot", root + "/delta"
-        sink = snapshot_delta_sink(snap, delta, latest_per_key_merge(["key"]))
+    snap, delta = root + "/snapshot", root + "/delta"
+    sink = snapshot_delta_sink(snap, delta, latest_per_key_merge(["key"]))
 
-        def start_run():
-            stream = (
-                spark.readStream.format("odin_rest")
-                .schema(ddl)
-                .option("path", feed_file)
-                .option("id_field", "id")
-                .option("batch_limit", str(batch_limit))
-                .load()
-                .select(
-                    F.col("device").alias("key"),
-                    F.timestamp_micros(F.col("ts_us")).alias("ts"),
-                    "lat",
-                    "lon",
-                )
+    def start_run():
+        stream = (
+            spark.readStream.format("odin_rest")
+            .schema(ddl)
+            .option("path", feed_file)
+            .option("id_field", "id")
+            .option("batch_limit", str(batch_limit))
+            .load()
+            .select(
+                F.col("device").alias("key"),
+                F.timestamp_micros(F.col("ts_us")).alias("ts"),
+                "lat",
+                "lon",
             )
-            store = position_store_state(stream.groupBy("key"))
-            return (
-                store.writeStream.foreachBatch(sink)
-                .option("checkpointLocation", root + "/ckpt")
-                .outputMode("update")
-                .trigger(availableNow=True)
-                .start()
-            )
+        )
+        store = position_store_state(stream.groupBy("key"))
+        return (
+            store.writeStream.foreachBatch(sink)
+            .option("checkpointLocation", root + "/ckpt")
+            .outputMode("update")
+            .trigger(availableNow=True)
+            .start()
+        )
 
-        with _stream_state_parallelism(spark, 8):
-            drain_polling_source(start_run, expected_rows=n)
-        kept = read_sink_or_empty(
-            spark, snap,
-            "key string, ts timestamp, lat double, lon double, "
-            "n_updates bigint",
-        )
-        cutoff = F.lit(max_ts) - F.expr("INTERVAL 30 MINUTES")
-        out = kept.select(
-            "key", "ts",
-            F.round("lat", 6).alias("lat"),
-            F.round("lon", 6).alias("lon"),
-            "n_updates",
-            F.when(F.col("ts") < cutoff, F.lit("stale"))
-            .otherwise(F.lit("live")).alias("status"),
-        )
-        rows = out.collect()  # materialize before the temp store is deleted
-        return spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    with _stream_state_parallelism(spark, 8):
+        drain_polling_source(start_run, expected_rows=n)
+    kept = read_sink_or_empty(
+        spark, snap,
+        "key string, ts timestamp, lat double, lon double, "
+        "n_updates bigint",
+    )
+    cutoff = F.lit(max_ts) - F.expr("INTERVAL 30 MINUTES")
+    out = kept.select(
+        "key", "ts",
+        F.round("lat", 6).alias("lat"),
+        F.round("lon", 6).alias("lon"),
+        "n_updates",
+        F.when(F.col("ts") < cutoff, F.lit("stale"))
+        .otherwise(F.lit("live")).alias("status"),
+    )
+    return out
 
 
 Q319_SQL = """

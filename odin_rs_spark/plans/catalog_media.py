@@ -18,10 +18,8 @@ from odin_rs_spark.plans.catalog_core import *  # noqa: F401,F403
 # breaks the aggregate against the oracle.
 # --------------------------------------------------------------------------
 
-def q120_stream_upsert_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
+@_scratch_query
+def q120_stream_upsert_capped(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
     from odin_rs_spark.streaming.pipelines import (
         atomic_snapshot_swap,
         read_snapshot,
@@ -31,51 +29,46 @@ def q120_stream_upsert_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     from odin_rs_spark.streaming.state import upsert_sorted_capped
 
     ev = _t(spark, sf_dir, "events").select("event_id", "user_id", "ts", "value")
-    root = tempfile.mkdtemp(prefix="odin_q120_")
-    try:
-        split_for_replay(ev, root + "/chunks", n_chunks=4, order_col="ts")
-        # update generation: same ids, strictly newer event time (lands
-        # last both by mtime — written after the chunks — and by ts)
-        updates = ev.filter(F.col("event_id") % 7 == 0).select(
-            "event_id",
-            "user_id",
-            (F.col("ts") + F.expr("INTERVAL 35 DAYS")).alias("ts"),
-            (F.col("value") + F.lit(1000.0)).alias("value"),
-        )
-        updates.coalesce(1).write.mode("overwrite").parquet(
-            root + "/chunks/chunk_zz_updates"
-        )
-        stream = replay_stream(spark, root + "/chunks", ev.schema, 2)
-        store = root + "/store"
+    split_for_replay(ev, root + "/chunks", n_chunks=4, order_col="ts")
+    # update generation: same ids, strictly newer event time (lands
+    # last both by mtime — written after the chunks — and by ts)
+    updates = ev.filter(F.col("event_id") % 7 == 0).select(
+        "event_id",
+        "user_id",
+        (F.col("ts") + F.expr("INTERVAL 35 DAYS")).alias("ts"),
+        (F.col("value") + F.lit(1000.0)).alias("value"),
+    )
+    updates.coalesce(1).write.mode("overwrite").parquet(
+        root + "/chunks/chunk_zz_updates"
+    )
+    stream = replay_stream(spark, root + "/chunks", ev.schema, 2)
+    store = root + "/store"
 
-        def upsert(batch_df: DataFrame, batch_id: int) -> None:
-            # rename-swap (not delete-before-write): a crash mid-swap
-            # leaves a complete store at '.old'/'.staging' that
-            # read_snapshot recovers, so a replayed batch never rebuilds
-            # from None. At 100× the O(store) snapshot rewrite is the
-            # cost to swap for a Delta/Iceberg MERGE — see
-            # atomic_snapshot_swap's docstring for the exact seam.
-            old = read_snapshot(batch_df.sparkSession, store)
-            new = upsert_sorted_capped(
-                old, batch_df, "event_id", ["user_id"], "ts", max_len=20
-            )
-            atomic_snapshot_swap(new, store)
-
-        with _stream_state_parallelism(spark, 8):
-            run_available_now(stream, upsert, root + "/ckpt", output_mode="append")
-        kept = spark.read.parquet(store)
-        out = kept.groupBy((F.col("user_id") % 8).alias("bucket")).agg(
-            F.count(F.lit(1)).alias("n_kept"),
-            F.count_distinct("user_id").alias("n_users"),
-            F.sum(F.when(F.col("value") >= 1000.0, 1).otherwise(0))
-            .cast("bigint")
-            .alias("n_updated"),
-            F.round(F.sum("value"), 4).alias("sum_value"),
+    def upsert(batch_df: DataFrame, batch_id: int) -> None:
+        # rename-swap (not delete-before-write): a crash mid-swap
+        # leaves a complete store at '.old'/'.staging' that
+        # read_snapshot recovers, so a replayed batch never rebuilds
+        # from None. At 100× the O(store) snapshot rewrite is the
+        # cost to swap for a Delta/Iceberg MERGE — see
+        # atomic_snapshot_swap's docstring for the exact seam.
+        old = read_snapshot(batch_df.sparkSession, store)
+        new = upsert_sorted_capped(
+            old, batch_df, "event_id", ["user_id"], "ts", max_len=20
         )
-        rows = out.collect()  # materialize before the temp store is deleted
-        return spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+        atomic_snapshot_swap(new, store)
+
+    with _stream_state_parallelism(spark, 8):
+        run_available_now(stream, upsert, root + "/ckpt", output_mode="append")
+    kept = spark.read.parquet(store)
+    out = kept.groupBy((F.col("user_id") % 8).alias("bucket")).agg(
+        F.count(F.lit(1)).alias("n_kept"),
+        F.count_distinct("user_id").alias("n_users"),
+        F.sum(F.when(F.col("value") >= 1000.0, 1).otherwise(0))
+        .cast("bigint")
+        .alias("n_updated"),
+        F.round(F.sum("value"), 4).alias("sum_value"),
+    )
+    return out
 
 
 Q120_SQL = """
@@ -258,10 +251,8 @@ FROM c WHERE mask >= 2.0 GROUP BY xb
 # and the first-seen-batch rule exactly.
 # --------------------------------------------------------------------------
 
-def q123_stream_segment_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
+@_scratch_query
+def q123_stream_segment_dedup(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
     from odin_rs_spark.streaming.pipelines import (
         incremental_segment_dedup_sink,
         run_available_now,
@@ -269,34 +260,29 @@ def q123_stream_segment_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from odin_rs_spark.streaming.sources import replay_stream, split_for_replay
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "source", "text")
-    root = tempfile.mkdtemp(prefix="odin_q123_")
-    try:
-        split_for_replay(docs, root + "/chunks", n_chunks=4, order_col="doc_id")
-        stream = replay_stream(spark, root + "/chunks", docs.schema, 1)
-        sink = incremental_segment_dedup_sink(
-            root + "/store",
-            root + "/stats",
-            seg_words=10,
-            extra_cols=("source",),
-        )
-        with _stream_state_parallelism(spark, 8):
-            run_available_now(stream, sink, root + "/ckpt", output_mode="append")
-        stats = spark.read.parquet(root + "/stats").withColumn(
-            "__ratio", F.col("n_dup_segs") / F.col("n_segs").cast("double")
-        )
-        out = stats.groupBy("source").agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("n_segs").cast("bigint").alias("n_segs"),
-            F.sum("n_dup_segs").cast("bigint").alias("n_dup_segs"),
-            F.round(F.avg("__ratio"), 6).alias("avg_dup_ratio"),
-            F.sum(F.when(F.col("__ratio") > 0.5, 1).otherwise(0))
-            .cast("bigint")
-            .alias("n_flagged"),
-        )
-        rows = out.collect()  # materialize before the temp store is deleted
-        return spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    split_for_replay(docs, root + "/chunks", n_chunks=4, order_col="doc_id")
+    stream = replay_stream(spark, root + "/chunks", docs.schema, 1)
+    sink = incremental_segment_dedup_sink(
+        root + "/store",
+        root + "/stats",
+        seg_words=10,
+        extra_cols=("source",),
+    )
+    with _stream_state_parallelism(spark, 8):
+        run_available_now(stream, sink, root + "/ckpt", output_mode="append")
+    stats = spark.read.parquet(root + "/stats").withColumn(
+        "__ratio", F.col("n_dup_segs") / F.col("n_segs").cast("double")
+    )
+    out = stats.groupBy("source").agg(
+        F.count(F.lit(1)).alias("n_docs"),
+        F.sum("n_segs").cast("bigint").alias("n_segs"),
+        F.sum("n_dup_segs").cast("bigint").alias("n_dup_segs"),
+        F.round(F.avg("__ratio"), 6).alias("avg_dup_ratio"),
+        F.sum(F.when(F.col("__ratio") > 0.5, 1).otherwise(0))
+        .cast("bigint")
+        .alias("n_flagged"),
+    )
+    return out
 
 
 Q123_SQL = rf"""
@@ -988,52 +974,45 @@ FROM tiles WHERE w_diff >= 0.05 AND g_diff >= 0.005
 # on the layout is pinned in tests/test_plan_quality.py.
 # --------------------------------------------------------------------------
 
-def q133_dem_tile_heights(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
+@_scratch_query
+def q133_dem_tile_heights(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
+    # DEM: 200x200 cells at 0.01 deg over lon [-110,-108) lat [35,37),
+    # h = ((ix*13 + iy*7) % 500) * 0.25 (exact dyadic); tile = 100x100
+    cells = spark.range(200 * 200).select(
+        (F.col("id") % 200).alias("ix"), (F.col("id") / 200).cast("long").alias("iy")
+    )
+    cells = cells.select(
+        "ix",
+        "iy",
+        (((F.col("ix") * 13 + F.col("iy") * 7) % 500) * 0.25).alias("height"),
+        (F.col("ix") / 100).cast("int").alias("tx"),
+        (F.col("iy") / 100).cast("int").alias("ty"),
+    )
+    cells.write.mode("overwrite").partitionBy("tx", "ty").parquet(root)
+    store = spark.read.parquet(root)
 
-    root = tempfile.mkdtemp(prefix="odin_q133_")
-    try:
-        # DEM: 200x200 cells at 0.01 deg over lon [-110,-108) lat [35,37),
-        # h = ((ix*13 + iy*7) % 500) * 0.25 (exact dyadic); tile = 100x100
-        cells = spark.range(200 * 200).select(
-            (F.col("id") % 200).alias("ix"), (F.col("id") / 200).cast("long").alias("iy")
-        )
-        cells = cells.select(
-            "ix",
-            "iy",
-            (((F.col("ix") * 13 + F.col("iy") * 7) % 500) * 0.25).alias("height"),
-            (F.col("ix") / 100).cast("int").alias("tx"),
-            (F.col("iy") / 100).cast("int").alias("ty"),
-        )
-        cells.write.mode("overwrite").partitionBy("tx", "ty").parquet(root)
-        store = spark.read.parquet(root)
-
-        # sample points at cell centers (+0.005 keeps floor() away from
-        # the cell edge in both engines); ix = k*37 % 200 and iy =
-        # k*53 % 200 sweep every tile and cross the ix/iy = 100 seams
-        pts = spark.range(120).select(
-            F.col("id").alias("pt_id"),
-            (F.lit(-110.0) + (F.col("id") * 37 % 200) * 0.01 + 0.005).alias("lon"),
-            (F.lit(35.0) + (F.col("id") * 53 % 200) * 0.01 + 0.005).alias("lat"),
-        )
-        q = (
-            pts.withColumn("ix", F.floor((F.col("lon") + 110.0) / 0.01))
-            .withColumn("iy", F.floor((F.col("lat") - 35.0) / 0.01))
-            .withColumn("tx", (F.col("ix") / 100).cast("int"))
-            .withColumn("ty", (F.col("iy") / 100).cast("int"))
-        )
-        joined = F.broadcast(q).join(store, ["tx", "ty", "ix", "iy"], "inner")
-        out = joined.select(
-            "pt_id",
-            F.round("lon", 6).alias("lon"),
-            F.round("lat", 6).alias("lat"),
-            "height",
-        )
-        rows = out.collect()  # 120 rows — materialize before rmtree
-        return spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    # sample points at cell centers (+0.005 keeps floor() away from
+    # the cell edge in both engines); ix = k*37 % 200 and iy =
+    # k*53 % 200 sweep every tile and cross the ix/iy = 100 seams
+    pts = spark.range(120).select(
+        F.col("id").alias("pt_id"),
+        (F.lit(-110.0) + (F.col("id") * 37 % 200) * 0.01 + 0.005).alias("lon"),
+        (F.lit(35.0) + (F.col("id") * 53 % 200) * 0.01 + 0.005).alias("lat"),
+    )
+    q = (
+        pts.withColumn("ix", F.floor((F.col("lon") + 110.0) / 0.01))
+        .withColumn("iy", F.floor((F.col("lat") - 35.0) / 0.01))
+        .withColumn("tx", (F.col("ix") / 100).cast("int"))
+        .withColumn("ty", (F.col("iy") / 100).cast("int"))
+    )
+    joined = F.broadcast(q).join(store, ["tx", "ty", "ix", "iy"], "inner")
+    out = joined.select(
+        "pt_id",
+        F.round("lon", 6).alias("lon"),
+        F.round("lat", 6).alias("lat"),
+        "height",
+    )
+    return out
 
 
 Q133_SQL = """

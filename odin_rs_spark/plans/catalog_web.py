@@ -6090,10 +6090,8 @@ Q245_SQL = _q245_sql()
 # --------------------------------------------------------------------------
 
 
-def q246_stream_ddsketch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
+@_scratch_query
+def q246_stream_ddsketch(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
     from odin_rs_spark.operators.sketches import (
         ddsketch_build,
         ddsketch_quantiles,
@@ -6109,32 +6107,27 @@ def q246_stream_ddsketch(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("value") > 0)  # DDSketch positive domain (see q245)
         .select("event_type", "value", "ts")
     )
-    root = tempfile.mkdtemp(prefix="odin_q246_")
-    try:
-        split_for_replay(ev, root + "/chunks", n_chunks=4, order_col="ts")
-        stream = replay_stream(spark, root + "/chunks", ev.schema, 2)
+    split_for_replay(ev, root + "/chunks", n_chunks=4, order_col="ts")
+    stream = replay_stream(spark, root + "/chunks", ev.schema, 2)
 
-        def merge(old: DataFrame | None, batch_df: DataFrame) -> DataFrame:
-            sk = ddsketch_build(batch_df, "value", ["event_type"])
-            if old is None:
-                return sk
-            return (
-                old.unionByName(sk)
-                .groupBy("event_type", "bucket")
-                .agg(F.sum("cnt").alias("cnt"))
-            )
-
-        sink = snapshot_delta_sink(
-            root + "/snapshot", root + "/delta", merge_fn=merge
+    def merge(old: DataFrame | None, batch_df: DataFrame) -> DataFrame:
+        sk = ddsketch_build(batch_df, "value", ["event_type"])
+        if old is None:
+            return sk
+        return (
+            old.unionByName(sk)
+            .groupBy("event_type", "bucket")
+            .agg(F.sum("cnt").alias("cnt"))
         )
-        with _stream_state_parallelism(spark, 8):
-            run_available_now(stream, sink, root + "/ckpt", output_mode="append")
-        sk_df = spark.read.parquet(root + "/snapshot")
-        out = ddsketch_quantiles(sk_df, ["event_type"], [(95, 100)])
-        rows = out.collect()  # materialize before the temp store is deleted
-        return spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+
+    sink = snapshot_delta_sink(
+        root + "/snapshot", root + "/delta", merge_fn=merge
+    )
+    with _stream_state_parallelism(spark, 8):
+        run_available_now(stream, sink, root + "/ckpt", output_mode="append")
+    sk_df = spark.read.parquet(root + "/snapshot")
+    out = ddsketch_quantiles(sk_df, ["event_type"], [(95, 100)])
+    return out
 
 
 def _q246_sql() -> str:

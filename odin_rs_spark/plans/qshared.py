@@ -6,7 +6,11 @@ catalog_lake, chained by wildcard re-export."""
 
 from __future__ import annotations
 
-from collections.abc import Callable
+import contextlib
+import functools
+import shutil
+import tempfile
+from collections.abc import Callable, Iterator
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -34,6 +38,45 @@ class QuerySpec:
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return load_table(spark, name, sf_dir)
+
+
+def _scratch_query(
+    fn: Callable[[SparkSession, str, str], DataFrame],
+) -> Callable[[SparkSession, str], DataFrame]:
+    """Give a catalog query that replays a stream or builds a small lake
+    a private scratch dir: the body runs as fn(spark, sf_dir, root) and
+    returns a plan over files under root. The caller gets that plan
+    materialized executor-side (eager localCheckpoint — rows never pass
+    through the driver, the schema is the plan's own), so removing root
+    afterwards cannot break its lineage."""
+
+    @functools.wraps(fn)
+    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
+        root = tempfile.mkdtemp(prefix=f"odin_{fn.__name__}_")
+        try:
+            return fn(spark, sf_dir, root).localCheckpoint(eager=True)
+        finally:
+            shutil.rmtree(root, ignore_errors=True)
+
+    return run
+
+
+@contextlib.contextmanager
+def _stream_state_parallelism(spark: SparkSession, n: int = 8) -> Iterator[None]:
+    """Scope spark.sql.shuffle.partitions for a streaming run. A
+    streaming query's state-store partition count is frozen at first
+    checkpoint from this conf — it should be sized to STATE VOLUME
+    (here O(windows × classes), tiny), not to the session's batch scan
+    parallelism: 32 state partitions × N micro-batches is pure
+    commit/HDFSStateStore overhead (measured 10.4 s → 3.9 s on q96 at
+    sf0.1). On a real cluster you'd set this per-query the same way —
+    it only governs the stateful stages of THIS stream."""
+    saved = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(n))
+    try:
+        yield
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", saved)
 
 
 def _wide(

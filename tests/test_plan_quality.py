@@ -1040,3 +1040,90 @@ def test_position_store_state_runs_without_python_worker(spark, tmp_path):
     plan = q._jsq.explainInternal(False)
     assert "StateStoreSave" in plan, plan
     assert "FlatMapGroupsInPandasWithState" not in plan, plan
+
+
+def _job_count(spark) -> int:
+    """Jobs the session has launched so far (the status store's list,
+    read once the listener bus has drained)."""
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty()
+    return sc.statusStore().jobsList(None).size()
+
+
+def test_q264_builds_without_jobs(spark, sf_dir):
+    """q264's FK audit is one lazy plan: building it launches no Spark
+    job (the seed offset is a 1-row cross join, not a collected scalar,
+    and each FK is a left join + aggregate, not two counts)."""
+    from odin_rs_spark.plans.catalog import CATALOG
+
+    # a table's first load infers its parquet schema with a job of its
+    # own; load_table memoizes the plan, so warm the four tables first
+    for name in ("lineitem", "orders", "customer", "nation"):
+        load_table(spark, name, sf_dir)
+    fn = CATALOG["q264_fk_conformance"].fn
+    before = _job_count(spark)
+    df = fn(spark, sf_dir)
+    assert _job_count(spark) == before
+    assert df.columns == ["fk", "n_child", "n_orphans"]
+
+
+def test_scratch_query_result_outlives_its_root(spark):
+    """_scratch_query hands back the body's rows and schema, readable
+    after the scratch dir is gone."""
+    import os
+
+    from odin_rs_spark.plans.qshared import _scratch_query
+
+    roots = []
+
+    @_scratch_query
+    def q(spark, sf_dir, root):
+        roots.append(root)
+        spark.range(5).selectExpr("id", "id * 2 AS twice").write.parquet(root + "/t")
+        return spark.read.parquet(root + "/t")
+
+    df = q(spark, "unused")
+    assert not os.path.exists(roots[0])
+    assert df.schema.simpleString() == "struct<id:bigint,twice:bigint>"
+    assert sorted(tuple(r) for r in df.collect()) == [(i, 2 * i) for i in range(5)]
+
+
+def test_scratch_query_removes_root_when_the_body_raises(spark):
+    import os
+
+    from odin_rs_spark.plans.qshared import _scratch_query
+
+    roots = []
+
+    @_scratch_query
+    def q(spark, sf_dir, root):
+        roots.append(root)
+        open(os.path.join(root, "partial"), "w").close()
+        raise RuntimeError("body failed")
+
+    with pytest.raises(RuntimeError, match="body failed"):
+        q(spark, "unused")
+    assert not os.path.exists(roots[0])
+
+
+def test_scratch_dirs_live_only_in_qshared():
+    """Every catalog query that needs a temp dir goes through
+    qshared._scratch_query: no other plans module creates or removes
+    one, or round-trips its result through driver rows."""
+    import pathlib
+
+    import odin_rs_spark.plans as plans
+
+    banned = (
+        "tempfile.mkdtemp",
+        "shutil.rmtree(root",
+        "return spark.createDataFrame(rows",
+    )
+    hits = [
+        (p.name, b)
+        for p in sorted(pathlib.Path(plans.__file__).parent.glob("*.py"))
+        if p.name != "qshared.py"
+        for b in banned
+        if b in p.read_text()
+    ]
+    assert hits == []
