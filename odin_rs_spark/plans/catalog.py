@@ -35,6 +35,10 @@ from odin_rs_spark.plans.catalog_lake import *  # noqa: F401,F403
 # editing _CAP_FRONT IS the rotation; the QuerySpec list keeps its
 # historical grouping and does not move.
 #
+# Round 15: every sink consumer whose code path changed (the snapshot
+# sink lands each batch once and merges from the landed partition;
+# q120 and q123 share its helpers) already leads, so the order stands.
+#
 # Round 14: every temp-dir query now runs through qshared's
 # _scratch_query (one mkdtemp/rmtree, result materialized by an eager
 # localCheckpoint instead of collect + createDataFrame), so all 21 are

@@ -20,11 +20,7 @@ from odin_rs_spark.plans.catalog_core import *  # noqa: F401,F403
 
 @_scratch_query
 def q120_stream_upsert_capped(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
-    from odin_rs_spark.streaming.pipelines import (
-        atomic_snapshot_swap,
-        read_snapshot,
-        run_available_now,
-    )
+    from odin_rs_spark.streaming.pipelines import run_available_now, snapshot_sink
     from odin_rs_spark.streaming.sources import replay_stream, split_for_replay
     from odin_rs_spark.streaming.state import upsert_sorted_capped
 
@@ -44,21 +40,15 @@ def q120_stream_upsert_capped(spark: SparkSession, sf_dir: str, root: str) -> Da
     stream = replay_stream(spark, root + "/chunks", ev.schema, 2)
     store = root + "/store"
 
-    def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        # rename-swap (not delete-before-write): a crash mid-swap
-        # leaves a complete store at '.old'/'.staging' that
-        # read_snapshot recovers, so a replayed batch never rebuilds
-        # from None. At 100× the O(store) snapshot rewrite is the
-        # cost to swap for a Delta/Iceberg MERGE — see
-        # atomic_snapshot_swap's docstring for the exact seam.
-        old = read_snapshot(batch_df.sparkSession, store)
-        new = upsert_sorted_capped(
+    # rename-swap (not delete-before-write): a crash mid-swap is recovered
+    sink = snapshot_sink(
+        store,
+        lambda old, batch_df: upsert_sorted_capped(
             old, batch_df, "event_id", ["user_id"], "ts", max_len=20
-        )
-        atomic_snapshot_swap(new, store)
-
+        ),
+    )
     with _stream_state_parallelism(spark, 8):
-        run_available_now(stream, upsert, root + "/ckpt", output_mode="append")
+        run_available_now(stream, sink, root + "/ckpt", output_mode="append")
     kept = spark.read.parquet(store)
     out = kept.groupBy((F.col("user_id") % 8).alias("bucket")).agg(
         F.count(F.lit(1)).alias("n_kept"),

@@ -120,12 +120,10 @@ def read_sink_or_empty(spark: SparkSession, path: str, schema: str) -> DataFrame
     source yielded ZERO batches — foreachBatch never fired, so the sink
     directory was never created and a bare spark.read.parquet would
     throw AnalysisException where the query semantics call for an empty
-    result. Runs rename-swap crash recovery first so it is also safe on
-    snapshot directories."""
-    recover_snapshot(path)
-    if os.path.exists(path):
-        return spark.read.parquet(path)
-    return spark.createDataFrame([], schema)
+    result. Reads through `read_snapshot`, so rename-swap crash recovery
+    runs first and it is also safe on snapshot directories."""
+    got = read_snapshot(spark, path)
+    return got if got is not None else spark.createDataFrame([], schema)
 
 
 def latest_per_key_merge(key_cols: list[str]):
@@ -145,6 +143,25 @@ def latest_per_key_merge(key_cols: list[str]):
     return merge
 
 
+def snapshot_sink(snapshot_dir: str, merge_fn):
+    """foreachBatch sink keeping `snapshot_dir` as the current complete
+    state: `merge_fn(old_snapshot_df | None, batch_df) -> DataFrame`
+    computes it, `atomic_snapshot_swap` replaces it. The closure reads
+    the old snapshot with the schema it last wrote (the merge's output,
+    which can differ from the batch's), so only the first batch after a
+    start pays a parquet schema-inference job."""
+    snap_schema = None
+
+    def sink(batch_df: DataFrame, batch_id: int) -> None:
+        nonlocal snap_schema
+        old = read_snapshot(batch_df.sparkSession, snapshot_dir, snap_schema)
+        new_snap = merge_fn(old, batch_df)
+        atomic_snapshot_swap(new_snap, snapshot_dir)
+        snap_schema = new_snap.schema
+
+    return sink
+
+
 def snapshot_delta_sink(
     snapshot_dir: str,
     delta_dir: str,
@@ -153,48 +170,35 @@ def snapshot_delta_sink(
     """foreachBatch sink maintaining BOTH output modes of the reference
     server (odin_server/src/spa.rs:486-723):
 
-    - `delta_dir`: append-only per-micro-batch changes (K1 broadcast
-      payloads, partitioned by batch id);
+    - `delta_dir`: per-micro-batch changes (K1 broadcast payloads),
+      landed by `partitioned_append_sink`, so a retried or replayed
+      batch replaces its first attempt;
     - `snapshot_dir`: the current complete state a newly connected
-      client receives (K2), atomically replaced per batch.
+      client receives (K2), kept by `snapshot_sink(snapshot_dir,
+      merge_fn)`, e.g. with `latest_per_key_merge`.
 
-    `merge_fn(old_snapshot_df | None, batch_df) -> DataFrame` computes
-    the new snapshot (e.g. `latest_per_key_merge`).
     Parquet stands in for a transactional table format; on a cluster
     this sink is a Delta MERGE + CDF read, same shape (see
     `atomic_snapshot_swap` for the exact swap point).
 
-    The batch is used twice (delta append, merge), so it is materialized
-    once with `localCheckpoint()`, not `persist()`: on a micro-batch of a
-    streaming aggregate whose result is read back through struct fields
-    (`position_store_state`), the first action over a persisted batch
-    fails with `NoSuchElementException: key not found` on the grouping
-    attribute, while a local checkpoint cuts the plan from its streaming
-    lineage. Spark's context cleaner frees the checkpoint blocks once the
-    JVM collects the checkpointed plan (at the latest on its periodic
-    GC), so a long-running stream does not accumulate them.
-
-    The closure keeps the schema of the last snapshot it wrote (the
-    merge's output schema, which can differ from the batch's) and reads
-    the old snapshot with it, so no batch after the first pays a parquet
-    schema-inference job; the first batch after a restart still infers
-    it.
+    Only the landing write runs the batch's plan: the merge reads the
+    landed `__batch_id=N` partition back with the batch's schema (no
+    inference job). An empty batch lands no partition, so the merge
+    gets an empty frame of that schema and the first batch still
+    creates the snapshot.
     """
-    snap_schema = None
+    land = partitioned_append_sink(delta_dir)
+    merge_into_snapshot = snapshot_sink(snapshot_dir, merge_fn)
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        nonlocal snap_schema
         spark = batch_df.sparkSession
-        batch_df = batch_df.localCheckpoint()
-        (
-            batch_df.withColumn("__batch_id", F.lit(batch_id))
-            .write.mode("append")
-            .parquet(delta_dir)
-        )
-        old = read_snapshot(spark, snapshot_dir, snap_schema)
-        new_snap = merge_fn(old, batch_df)
-        atomic_snapshot_swap(new_snap, snapshot_dir)
-        snap_schema = new_snap.schema
+        land(batch_df, batch_id)
+        landed = os.path.join(delta_dir, f"__batch_id={batch_id}")
+        if os.path.exists(landed):
+            changes = spark.read.schema(batch_df.schema).parquet(landed)
+        else:
+            changes = spark.createDataFrame([], batch_df.schema)
+        merge_into_snapshot(changes, batch_id)
 
     return sink
 
@@ -202,13 +206,13 @@ def snapshot_delta_sink(
 def partitioned_append_sink(out_dir: str):
     """foreachBatch sink for APPEND-mode streams whose emissions are
     exactly-once per logical row (watermark-closed windows, streaming
-    dropDuplicates): lands each micro-batch as its own __batch_id
-    partition with dynamic partition overwrite, so a foreachBatch RETRY
-    replaces its own first attempt instead of double-appending. The
-    read side is a plain parquet scan (drop __batch_id). This replaces
-    the driver-dict/collect() upsert pattern — rows never visit the
-    driver, so output cardinality is bounded by the cluster, not driver
-    memory."""
+    dropDuplicates): lands each micro-batch as its own `__batch_id=N`
+    partition directory with dynamic partition overwrite, so a
+    foreachBatch RETRY replaces its own first attempt instead of
+    double-appending (`snapshot_delta_sink` reads a batch back by that
+    directory name). The read side is a plain parquet scan (drop
+    __batch_id). Rows never visit the driver, so output cardinality is
+    bounded by the cluster, not driver memory."""
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         (
@@ -300,11 +304,13 @@ def incremental_segment_dedup_sink(
     foreachBatch RETRY safety: store rows carry the batch id and the
     dup probe reads only rows with __batch_id < current — a replayed
     batch therefore ignores its own first attempt's append and
-    recomputes identical stats; the stats write overwrites the batch's
-    own partition (dynamic partitionOverwriteMode) instead of
-    double-appending.
+    recomputes identical stats; the stats land through
+    `partitioned_append_sink`, which overwrites the batch's own
+    partition instead of double-appending.
     """
     from odin_rs_spark.operators.text import _segment_hashes
+
+    land_stats = partitioned_append_sink(stats_dir)
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         s = batch_df.sparkSession
@@ -336,13 +342,7 @@ def incremental_segment_dedup_sink(
                 .cast("bigint")
                 .alias("n_dup_segs"),
             )
-            (
-                stats.withColumn("__batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("__batch_id")
-                .parquet(stats_dir)
-            )
+            land_stats(stats, batch_id)
             new_hashes = segs.select("__h").distinct()
             if store is not None:
                 new_hashes = new_hashes.join(

@@ -1127,3 +1127,48 @@ def test_scratch_dirs_live_only_in_qshared():
         if b in p.read_text()
     ]
     assert hits == []
+
+
+def test_snapshot_delta_sink_jobs_per_batch(spark, tmp_path):
+    """The snapshot sink computes a position-store batch once: one job
+    lands it, and the merge reads the landed partition back without a
+    schema-inference job. With no old snapshot the merge is one write
+    (2 jobs per sink call); with one it adds the left-anti join
+    (3 jobs)."""
+    import datetime as dt
+
+    from odin_rs_spark.streaming import pipelines, sources
+    from odin_rs_spark.streaming.state import position_store_state
+
+    def job_ids() -> set[int]:
+        # ids, not the list's size: the status store evicts old jobs
+        sc = spark.sparkContext._jsc.sc()
+        sc.listenerBus().waitUntilEmpty()
+        jobs = sc.statusStore().jobsList(None)
+        return {jobs.apply(i).jobId() for i in range(jobs.size())}
+
+    t0 = dt.datetime(2024, 1, 1)
+    df = spark.createDataFrame(
+        [(f"d{i % 3}", t0 + dt.timedelta(seconds=i), 35.0, -100.0) for i in range(12)],
+        "key string, ts timestamp, lat double, lon double",
+    )
+    root = str(tmp_path / "replay")
+    sources.split_for_replay(df, root, n_chunks=2, order_col="ts")
+    sink = pipelines.snapshot_delta_sink(
+        str(tmp_path / "snap"),
+        str(tmp_path / "delta"),
+        pipelines.latest_per_key_merge(["key"]),
+    )
+    jobs: list[int] = []
+
+    def counted(batch_df, batch_id):
+        before = job_ids()
+        sink(batch_df, batch_id)
+        jobs.append(len(job_ids() - before))
+
+    pipelines.run_available_now(
+        position_store_state(sources.replay_stream(spark, root, df.schema).groupBy("key")),
+        counted,
+        str(tmp_path / "ckpt"),
+    )
+    assert jobs == [2, 3]

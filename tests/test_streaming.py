@@ -789,6 +789,82 @@ def test_snapshot_delta_sink_resumes_with_merge_schema(spark, tmp_path):
     assert spark.read.parquet(delta).count() == 6
 
 
+def test_snapshot_delta_sink_rerun_of_uncommitted_batch_lands_once(spark, tmp_path):
+    """A crash after the sink of the last batch but before its commit:
+    the restarted query runs that batch again, and the delta still holds
+    every position-store row once (the rerun replaces the batch's
+    partition) with the snapshot unchanged."""
+    t0 = dt.datetime(2024, 1, 1, 10, 0, 0)
+    rows = [
+        (f"d{i % 5}", t0 + dt.timedelta(seconds=i), float(i), -float(i))
+        for i in range(30)
+    ]
+    df = spark.createDataFrame(rows, "key string, ts timestamp, lat double, lon double")
+    root = str(tmp_path / "replay")
+    sources.split_for_replay(df, root, n_chunks=3, order_col="ts")
+    snap, delta = str(tmp_path / "snap"), str(tmp_path / "delta")
+    ckpt = tmp_path / "ckpt"
+
+    def drain():
+        pipelines.run_available_now(
+            state.position_store_state(
+                sources.replay_stream(spark, root, df.schema).groupBy("key")
+            ),
+            pipelines.snapshot_delta_sink(
+                snap, delta, pipelines.latest_per_key_merge(["key"])
+            ),
+            str(ckpt),
+        )
+
+    drain()
+    before = sorted(tuple(r) for r in spark.read.parquet(snap).collect())
+    (ckpt / "commits" / "2").unlink()
+    for crc in (ckpt / "commits").glob(".2*.crc"):
+        crc.unlink()
+    drain()
+    d = spark.read.parquet(delta)
+    assert d.count() == 15  # 5 keys updated in each of 3 batches
+    assert sorted(tuple(r) for r in d.groupBy("__batch_id").count().collect()) == [
+        (0, 5), (1, 5), (2, 5),
+    ]
+    assert sorted(tuple(r) for r in spark.read.parquet(snap).collect()) == before
+
+
+def test_snapshot_delta_sink_retry_lands_batch_once(spark, tmp_path):
+    """A foreachBatch retry calls the sink twice with one batch id: the
+    delta holds that batch once and the snapshot is the same."""
+    snap, delta = str(tmp_path / "snap"), str(tmp_path / "delta")
+    sink = pipelines.snapshot_delta_sink(
+        snap, delta, pipelines.latest_per_key_merge(["key"])
+    )
+    b0 = spark.createDataFrame([("a", 1), ("b", 2)], "key string, v long")
+    sink(b0, 0)
+    sink(b0, 0)
+    sink(spark.createDataFrame([("a", 3)], "key string, v long"), 1)
+    got = sorted(tuple(r) for r in spark.read.parquet(delta).collect())
+    assert got == [("a", 1, 0), ("a", 3, 1), ("b", 2, 0)]
+    snapshot = sorted(tuple(r) for r in spark.read.parquet(snap).collect())
+    assert snapshot == [("a", 3), ("b", 2)]
+
+
+def test_snapshot_delta_sink_empty_batches(spark, tmp_path):
+    """An empty first batch still creates the (empty) snapshot; a later
+    empty batch leaves it unchanged and adds no delta rows."""
+    snap, delta = str(tmp_path / "snap"), str(tmp_path / "delta")
+    sink = pipelines.snapshot_delta_sink(
+        snap, delta, pipelines.latest_per_key_merge(["key"])
+    )
+    empty = spark.createDataFrame([], "key string, v long")
+    sink(empty, 0)
+    first = spark.read.parquet(snap)
+    assert first.count() == 0
+    assert [f.name for f in first.schema] == ["key", "v"]
+    sink(empty, 1)
+    assert spark.read.parquet(snap).count() == 0
+    deltas = spark.read.schema("key string, v long, __batch_id int").parquet(delta)
+    assert deltas.count() == 0
+
+
 def test_latest_per_key_merge_duplicate_batch_keys(spark):
     """Duplicate keys inside one batch: every batch row is kept and each
     old row whose key the batch touches is dropped exactly once — the
