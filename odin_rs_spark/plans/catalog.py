@@ -35,6 +35,13 @@ from odin_rs_spark.plans.catalog_lake import *  # noqa: F401,F403
 # editing _CAP_FRONT IS the rotation; the QuerySpec list keeps its
 # historical grouping and does not move.
 #
+# Round 16: every executor-built media fixture now goes through
+# qshared's _executor_blobs (same bytes, one pandas-UDF scaffold), so
+# one consumer of each of the 44 converted generators leads — q206
+# covers the pdf/wet/docx/xlsx/pptx five — then the read_sink_or_empty
+# callers (a sink of only empty batches now reads as the empty frame;
+# q118/q319 also drain through drain_polling_source's fixed bounds).
+#
 # Round 15: every sink consumer whose code path changed (the snapshot
 # sink lands each batch once and merges from the landed partition;
 # q120 and q123 share its helpers) already leads, so the order stands.
@@ -70,6 +77,52 @@ from odin_rs_spark.plans.catalog_lake import *  # noqa: F401,F403
 # Past slot 50: freshest-last; every registered query is locally
 # re-verified every round by tests/test_catalog_oracle.py.
 _CAP_FRONT = [
+    # r16 _executor_blobs: one consumer per converted generator
+    "q206_mixed_corpus5",
+    "q124_image_dedup",
+    "q131_image_structure_ssim",
+    "q136_audio_stats",
+    "q143_video_frame_index",
+    "q144_jpeg_decode",
+    "q151_video_decode",
+    "q158_video_demux_audio",
+    "q161_gif_decode",
+    "q170_interlaced_png",
+    "q171_bmp_decode",
+    "q172_mulaw_decode",
+    "q173_alaw_decode",
+    "q176_progressive_jpeg",
+    "q183_wat_links",
+    "q185_charset_decode",
+    "q188_pdf_objstm",
+    "q189_exif_audit",
+    "q190_oriented_stats",
+    "q194_pdf_fonts",
+    "q197_revisit_resolve",
+    "q198_coding_audit",
+    "q200_pdf_provenance",
+    "q210_excel_dates",
+    "q211_pdf_cid_text",
+    "q213_redirect_chains",
+    "q215_mime_sniff",
+    "q223_tiff_decode",
+    "q228_request_pairing",
+    "q229_pdf_encryption_audit",
+    "q239_eml_scan",
+    "q249_jpeg_quality",
+    "q251_tar_scan",
+    "q253_webdataset",
+    "q265_zip_scan",
+    "q272_onnx_conv_classify",
+    "q275_brotli_decode",
+    "q297_dtmf_decode",
+    "q307_msgpack_scan",
+    "q309_jsonl_zst_scan",
+    # r16 read_sink_or_empty (empty-batch sinks) and drain bounds
+    "q108_stream_distinct",
+    "q117_stream_sessions",
+    "q118_rest_source_ingest",
+    "q319_gpshub_ingest",
     # r12 changed-code re-grades: streaming replay (split_for_replay
     # concurrent chunk writes + pinned mtime order); r13: one-job
     # split_for_replay, replay_stream reader
@@ -78,8 +131,6 @@ _CAP_FRONT = [
     "q120_stream_upsert_capped",  # mtime-order regression site (fixed)
     "q96_stream_windowed",
     "q103_stream_ttl_latest",
-    "q117_stream_sessions",
-    "q108_stream_distinct",
     "q115_stream_hll_merge",
     "q123_stream_segment_dedup",
     "q246_stream_ddsketch",
@@ -87,9 +138,6 @@ _CAP_FRONT = [
     "q280_stream_full_outer",
     "q287_stream_dedup_ttl",
     "q91_stream_backfill_live",
-    # drain_polling_source empty-feed pass (behavior unchanged at n>0)
-    "q118_rest_source_ingest",
-    "q319_gpshub_ingest",
     # r14 _scratch_query conversions not already above, then q264
     "q273_goes_stream_flagship",
     "q277_mixed_granule_lake",

@@ -204,47 +204,35 @@ FROM stats s LEFT JOIN alloc a ON s.host = a.host
 
 
 def _q251_media(spark: SparkSession):
-    import pandas as pd
-    from pyspark.sql.types import BinaryType
-
-    from odin_rs_spark.deploy import ensure_shipped
-
-    ensure_shipped(spark)
-
-    def _mk(series):
+    def one(aid: int) -> bytes:
         from odin_rs_spark.sources.archive import encode_tar
 
-        out = []
-        for aid in series:
-            aid = int(aid)
-            members = [(f"shard{aid}/", None, "5", 1700000000 + aid)]
-            for m in range(2 + aid % 3):
-                words = " ".join(
-                    f"tw{(aid * 17 + m * 5 + w) % 29}"
-                    for w in range(6 + (aid + m) % 5)
-                )
-                name = f"shard{aid}/doc{m}.txt"
-                if aid % 5 == 0 and m == 0:
-                    name = ("p" * 80) + f"/shard{aid}/doc{m}.txt"
-                elif aid % 5 == 1 and m == 0:
-                    # >100-char UNSPLITTABLE segment: travels in a PAX
-                    # 'x' extended header (r10 — Pile-style shards)
-                    name = ("q" * 120) + f"_shard{aid}_doc{m}.txt"
-                members.append(
-                    (name, words.encode(), "0", 1700000000 + aid * 10 + m)
-                )
-            if aid % 3 == 0:
-                members.append(
-                    (f"shard{aid}/latest", None, "2", 1700000000 + aid)
-                )
-            out.append(encode_tar(members))
-        return pd.Series(out)
+        members = [(f"shard{aid}/", None, "5", 1700000000 + aid)]
+        for m in range(2 + aid % 3):
+            words = " ".join(
+                f"tw{(aid * 17 + m * 5 + w) % 29}"
+                for w in range(6 + (aid + m) % 5)
+            )
+            name = f"shard{aid}/doc{m}.txt"
+            if aid % 5 == 0 and m == 0:
+                name = ("p" * 80) + f"/shard{aid}/doc{m}.txt"
+            elif aid % 5 == 1 and m == 0:
+                # >100-char UNSPLITTABLE segment: travels in a PAX
+                # 'x' extended header (r10 — Pile-style shards)
+                name = ("q" * 120) + f"_shard{aid}_doc{m}.txt"
+            members.append(
+                (name, words.encode(), "0", 1700000000 + aid * 10 + m)
+            )
+        if aid % 3 == 0:
+            members.append(
+                (f"shard{aid}/latest", None, "2", 1700000000 + aid)
+            )
+        return encode_tar(members)
 
-    mk = F.pandas_udf(_mk, BinaryType())
-    return spark.range(30).select(
+    return _executor_blobs(spark, 30, content=one).select(
         F.concat(F.lit("t"), F.lpad(F.col("id").cast("string"), 2, "0"),
                  F.lit(".tar")).alias("path"),
-        mk(F.col("id")).alias("content"),
+        "content",
     )
 
 
@@ -411,51 +399,39 @@ JOIN exact e ON e.ta = u.ta AND e.tb = u.tb
 
 
 def _q253_media(spark: SparkSession):
-    import pandas as pd
-    from pyspark.sql.types import BinaryType
-
-    from odin_rs_spark.deploy import ensure_shipped
-
-    ensure_shipped(spark)
-
-    def _mk(series):
+    def one(aid: int) -> bytes:
         import numpy as np
 
         from odin_rs_spark.sources.archive import encode_tar
         from odin_rs_spark.sources.jpegcodec import encode_jpeg
 
-        out = []
-        for aid in series:
-            aid = int(aid)
-            members = []
-            for k in range(3 + aid % 3):
-                v = 2 * ((aid * 7 + k * 3) % 100) + 20
-                img = np.full((16, 16), v, np.uint8)
-                key = f"s{aid:02d}{k}"
-                members.append(
-                    (key + ".jpg", encode_jpeg(img), "0", 1700000000)
+        members = []
+        for k in range(3 + aid % 3):
+            v = 2 * ((aid * 7 + k * 3) % 100) + 20
+            img = np.full((16, 16), v, np.uint8)
+            key = f"s{aid:02d}{k}"
+            members.append(
+                (key + ".jpg", encode_jpeg(img), "0", 1700000000)
+            )
+            if (aid * 3 + k) % 7 != 0:
+                cap = " ".join(
+                    f"cw{(aid * 13 + k * 5 + w) % 31}"
+                    for w in range(4 + (aid + k) % 4)
                 )
-                if (aid * 3 + k) % 7 != 0:
-                    cap = " ".join(
-                        f"cw{(aid * 13 + k * 5 + w) % 31}"
-                        for w in range(4 + (aid + k) % 4)
-                    )
-                    members.append(
-                        (key + ".txt", cap.encode(), "0", 1700000000)
-                    )
-                if (aid + k) % 4 == 0:
-                    meta = b'{"id": %d}' % (aid * 100 + k)
-                    members.append(
-                        (key + ".json", meta, "0", 1700000000)
-                    )
-            out.append(encode_tar(members))
-        return pd.Series(out)
+                members.append(
+                    (key + ".txt", cap.encode(), "0", 1700000000)
+                )
+            if (aid + k) % 4 == 0:
+                meta = b'{"id": %d}' % (aid * 100 + k)
+                members.append(
+                    (key + ".json", meta, "0", 1700000000)
+                )
+        return encode_tar(members)
 
-    mk = F.pandas_udf(_mk, BinaryType())
-    return spark.range(24).select(
+    return _executor_blobs(spark, 24, content=one).select(
         F.concat(F.lit("w"), F.lpad(F.col("id").cast("string"), 2, "0"),
                  F.lit(".tar")).alias("path"),
-        mk(F.col("id")).alias("content"),
+        "content",
     )
 
 
@@ -1269,44 +1245,32 @@ FROM customer cu LEFT JOIN nation n ON cu.c_nationkey = n.n_nationkey
 
 
 def _q265_media(spark: SparkSession):
-    import pandas as pd
-    from pyspark.sql.types import BinaryType
-
-    from odin_rs_spark.deploy import ensure_shipped
-
-    ensure_shipped(spark)
-
-    def _mk(series):
+    def one(zid: int) -> bytes:
         import io
         import zipfile
 
-        out = []
-        for zid in series:
-            zid = int(zid)
-            buf = io.BytesIO()
-            zf = zipfile.ZipFile(buf, "w")
-            for m in range(2 + zid % 3):
-                words = " ".join(
-                    f"zw{(zid * 19 + m * 7 + w) % 31}"
-                    for w in range(5 + (zid + m) % 4)
-                )
-                zi = zipfile.ZipInfo(f"z{zid}/m{m}.txt")
-                zf.writestr(
-                    zi,
-                    words,
-                    compress_type=(
-                        zipfile.ZIP_STORED if m % 2 == 0 else zipfile.ZIP_DEFLATED
-                    ),
-                )
-            zf.close()
-            out.append(buf.getvalue())
-        return pd.Series(out)
+        buf = io.BytesIO()
+        zf = zipfile.ZipFile(buf, "w")
+        for m in range(2 + zid % 3):
+            words = " ".join(
+                f"zw{(zid * 19 + m * 7 + w) % 31}"
+                for w in range(5 + (zid + m) % 4)
+            )
+            zi = zipfile.ZipInfo(f"z{zid}/m{m}.txt")
+            zf.writestr(
+                zi,
+                words,
+                compress_type=(
+                    zipfile.ZIP_STORED if m % 2 == 0 else zipfile.ZIP_DEFLATED
+                ),
+            )
+        zf.close()
+        return buf.getvalue()
 
-    mk = F.pandas_udf(_mk, BinaryType())
-    return spark.range(24).select(
+    return _executor_blobs(spark, 24, content=one).select(
         F.concat(F.lit("z"), F.lpad(F.col("id").cast("string"), 2, "0"),
                  F.lit(".zip")).alias("path"),
-        mk(F.col("id")).alias("content"),
+        "content",
     )
 
 
@@ -1859,30 +1823,20 @@ def _formula_gray16_media(spark: SparkSession, n: int):
     """q272 fixture generator: n 16x16 grayscale formula PNGs encoded
     in executors (seed = id % 30; a = seed%5+1, b = seed%3+1,
     m = (seed*17)%200; v = (m + x*a + y*b) % 200)."""
-    import pandas as pd
-    from pyspark.sql.types import BinaryType
 
-    from odin_rs_spark.deploy import ensure_shipped
-
-    ensure_shipped(spark)
-
-    def _mk(series):
+    def one(mid: int) -> bytes:
         import numpy as np
 
         from odin_rs_spark.sources.imagecodec import encode_png
 
-        out = []
-        for mid in series:
-            seed = int(mid) % 30
-            a_, b_, m_ = seed % 5 + 1, seed % 3 + 1, (seed * 17) % 200
-            jj, ii = np.mgrid[0:16, 0:16]
-            arr = ((m_ + ii * a_ + jj * b_) % 200).astype(np.uint8)
-            out.append(encode_png(arr, filter_mode="cycle"))
-        return pd.Series(out)
+        seed = mid % 30
+        a_, b_, m_ = seed % 5 + 1, seed % 3 + 1, (seed * 17) % 200
+        jj, ii = np.mgrid[0:16, 0:16]
+        arr = ((m_ + ii * a_ + jj * b_) % 200).astype(np.uint8)
+        return encode_png(arr, filter_mode="cycle")
 
-    mk_png = F.pandas_udf(_mk, BinaryType())
-    return spark.range(n).select(
-        F.col("id").alias("media_id"), mk_png(F.col("id")).alias("content")
+    return _executor_blobs(spark, n, content=one).select(
+        F.col("id").alias("media_id"), "content"
     )
 
 
@@ -2232,51 +2186,39 @@ FROM b GROUP BY host
 # --------------------------------------------------------------------------
 
 def _q275_media(spark: SparkSession):
-    import pandas as pd
-    from pyspark.sql.types import BinaryType
-
-    from odin_rs_spark.deploy import ensure_shipped
-
-    ensure_shipped(spark)
-
-    def _mk(series):
+    def one(fno: int) -> bytes:
         from odin_rs_spark.sources.brotlidec import brotli_compress
         from odin_rs_spark.sources.warc import encode_warc
 
-        out = []
-        for fno in series:
-            fno = int(fno)
-            recs = [
-                {"warc_type": "warcinfo", "block": b"software: br-fixture\r\n"}
-            ]
-            for p in range(12):
-                g = fno * 12 + p
-                body = ("the " + " ".join(
-                    f"word{(g * 5 + j) % 19} and of that with"
-                    for j in range(3 + g % 4)
-                )).encode()
-                raw = brotli_compress(body, quality=(5, 9, 11)[g % 3])
-                msg = (
-                    f"HTTP/1.1 200 OK\r\nContent-Type: text/plain\r\n"
-                    f"Content-Encoding: br\r\n"
-                    f"Content-Length: {len(raw)}\r\n\r\n"
-                ).encode() + raw
-                recs.append(
-                    {
-                        "warc_type": "response",
-                        "target_uri": f"https://br{g % 3}.example.org/t/{g}",
-                        "content_type": "application/http; msgtype=response",
-                        "block": msg,
-                    }
-                )
-            out.append(encode_warc(recs))
-        return pd.Series(out)
+        recs = [
+            {"warc_type": "warcinfo", "block": b"software: br-fixture\r\n"}
+        ]
+        for p in range(12):
+            g = fno * 12 + p
+            body = ("the " + " ".join(
+                f"word{(g * 5 + j) % 19} and of that with"
+                for j in range(3 + g % 4)
+            )).encode()
+            raw = brotli_compress(body, quality=(5, 9, 11)[g % 3])
+            msg = (
+                f"HTTP/1.1 200 OK\r\nContent-Type: text/plain\r\n"
+                f"Content-Encoding: br\r\n"
+                f"Content-Length: {len(raw)}\r\n\r\n"
+            ).encode() + raw
+            recs.append(
+                {
+                    "warc_type": "response",
+                    "target_uri": f"https://br{g % 3}.example.org/t/{g}",
+                    "content_type": "application/http; msgtype=response",
+                    "block": msg,
+                }
+            )
+        return encode_warc(recs)
 
-    mk = F.pandas_udf(_mk, BinaryType())
-    return spark.range(2).select(
+    return _executor_blobs(spark, 2, content=one).select(
         F.concat(F.lit("br"), F.col("id").cast("string"), F.lit(".warc.gz"))
         .alias("path"),
-        mk(F.col("id")).alias("content"),
+        "content",
     )
 
 
@@ -4127,41 +4069,29 @@ FROM state GROUP BY snapshot_id, boundary
 # --------------------------------------------------------------------------
 
 def _dtmf_media(spark: SparkSession, n: int):
-    import pandas as pd
-    from pyspark.sql.types import BinaryType
-
-    from odin_rs_spark.deploy import ensure_shipped
-
-    ensure_shipped(spark)
-
-    def _mk(series):
+    def one(mid: int) -> bytes:
         import numpy as np
 
         from odin_rs_spark.sources.audiocodec import encode_wav
 
         lows, highs = (697, 770, 852, 941), (1209, 1336, 1477, 1633)
-        out = []
-        for mid in series:
-            mid = int(mid)
-            segs = []
-            for k in range(8):
-                d = (mid * 3 + k * 5) % 16
-                flo, fhi = lows[d // 4], highs[d % 4]
-                m = np.arange(410, dtype=np.float64)
-                tone = np.floor(
-                    5000.0 * np.sin(2.0 * np.pi * flo * m / 8000.0)
-                    + 4000.0 * np.sin(2.0 * np.pi * fhi * m / 8000.0)
-                    + 0.5
-                )
-                segs.append(tone)
-                segs.append(np.zeros(205))
-            s = np.concatenate(segs).astype(np.int16)
-            out.append(encode_wav(s, rate=8000))
-        return pd.Series(out)
+        segs = []
+        for k in range(8):
+            d = (mid * 3 + k * 5) % 16
+            flo, fhi = lows[d // 4], highs[d % 4]
+            m = np.arange(410, dtype=np.float64)
+            tone = np.floor(
+                5000.0 * np.sin(2.0 * np.pi * flo * m / 8000.0)
+                + 4000.0 * np.sin(2.0 * np.pi * fhi * m / 8000.0)
+                + 0.5
+            )
+            segs.append(tone)
+            segs.append(np.zeros(205))
+        s = np.concatenate(segs).astype(np.int16)
+        return encode_wav(s, rate=8000)
 
-    mk = F.pandas_udf(_mk, BinaryType())
-    return spark.range(n).select(
-        F.col("id").alias("media_id"), mk(F.col("id")).alias("content")
+    return _executor_blobs(spark, n, content=one).select(
+        F.col("id").alias("media_id"), "content"
     )
 
 
@@ -5218,39 +5148,27 @@ FROM scored GROUP BY 1, 2
 # --------------------------------------------------------------------------
 
 def _msgpack_media(spark: SparkSession, n_hosts: int):
-    import pandas as pd
-    from pyspark.sql.types import BinaryType
-
-    from odin_rs_spark.deploy import ensure_shipped
-
-    ensure_shipped(spark)
-
-    def _mk(series):
+    def one(hid: int) -> bytes:
         from odin_rs_spark.sources.msgpackcodec import encode_msgpack
 
-        out = []
-        for hid in series:
-            hid = int(hid)
-            buf = bytearray()
-            for i in range(200):
-                gid = hid * 200 + i
-                buf += encode_msgpack(
-                    {
-                        "seq": gid,
-                        "level": ["info", "warn", "error"][gid % 3],
-                        "latency_ms": (gid % 173) * 0.25,
-                        "ok": gid % 2 == 0,
-                        "retry": None if gid % 7 == 0 else gid % 5,
-                        "bytes_sent": gid * 100000,
-                        "delta": 100 - gid,
-                    }
-                )
-            out.append(bytes(buf))
-        return pd.Series(out)
+        buf = bytearray()
+        for i in range(200):
+            gid = hid * 200 + i
+            buf += encode_msgpack(
+                {
+                    "seq": gid,
+                    "level": ["info", "warn", "error"][gid % 3],
+                    "latency_ms": (gid % 173) * 0.25,
+                    "ok": gid % 2 == 0,
+                    "retry": None if gid % 7 == 0 else gid % 5,
+                    "bytes_sent": gid * 100000,
+                    "delta": 100 - gid,
+                }
+            )
+        return bytes(buf)
 
-    mk = F.pandas_udf(_mk, BinaryType())
-    return spark.range(n_hosts).select(
-        F.col("id").alias("media_id"), mk(F.col("id")).alias("content")
+    return _executor_blobs(spark, n_hosts, content=one).select(
+        F.col("id").alias("media_id"), "content"
     )
 
 
@@ -5421,52 +5339,37 @@ Q308_SQL = _q308_sql()
 # --------------------------------------------------------------------------
 
 def _jsonl_zst_media(spark: SparkSession, n_shards: int):
-    import pandas as pd
-    from pyspark.sql.types import BinaryType
-
-    from odin_rs_spark.deploy import ensure_shipped
-
-    ensure_shipped(spark)
-
-    def _mk(series):
+    def one(sid: int) -> bytes:
         import json as _json
 
         from odin_rs_spark.sources.zstdcodec import zstd_compress_store
 
-        out = []
-        for sid in series:
-            sid = int(sid)
-            lines = []
-            for i in range(300):
-                gid = sid * 300 + i
-                lines.append(
-                    _json.dumps(
-                        {
-                            "id": gid,
-                            "text": "token " * (gid % 7 + 1),
-                            "meta": {
-                                "source": f"src{gid % 5}",
-                                "score": (gid % 89) * 0.5,
-                            },
+        lines = []
+        for i in range(300):
+            gid = sid * 300 + i
+            lines.append(
+                _json.dumps(
+                    {
+                        "id": gid,
+                        "text": "token " * (gid % 7 + 1),
+                        "meta": {
+                            "source": f"src{gid % 5}",
+                            "score": (gid % 89) * 0.5,
                         },
-                        separators=(",", ":"),
-                    )
+                    },
+                    separators=(",", ":"),
                 )
-            out.append(zstd_compress_store("\n".join(lines).encode("utf-8")))
-        return pd.Series(out)
+            )
+        return zstd_compress_store("\n".join(lines).encode("utf-8"))
 
-    mk = F.pandas_udf(_mk, BinaryType())
-    return spark.range(n_shards).select(
-        F.col("id").alias("media_id"), mk(F.col("id")).alias("content")
+    return _executor_blobs(spark, n_shards, content=one).select(
+        F.col("id").alias("media_id"), "content"
     )
 
 
 def q309_jsonl_zst_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
 
-    from odin_rs_spark.deploy import ensure_shipped
-
-    ensure_shipped(spark)
     media = _jsonl_zst_media(spark, 5)
 
     def fn(batches):

@@ -323,32 +323,20 @@ def _formula_png_media(spark: SparkSession, n: int):
     p[j,i] = (m + i*a + j*b) %% 256 on a 32x24 grid) is the single
     definition both queries' oracles replay — keep the img/par CTEs of
     Q124_SQL and Q128_SQL in sync with THIS function."""
-    import pandas as pd
-    from pyspark.sql.types import BinaryType
 
-    from odin_rs_spark.deploy import ensure_shipped
-
-    # no table read here, so load_table-side shipping never runs —
-    # ship explicitly for external-cwd harnesses (q73 precedent)
-    ensure_shipped(spark)
-
-    def _mk(series):
+    def one(mid: int) -> bytes:
         import numpy as np
 
         from odin_rs_spark.sources.imagecodec import encode_png
 
-        out = []
-        for mid in series:
-            seed = int(mid) % 40
-            a_, b_, m_ = seed % 7, seed % 5 + 1, (seed * 13) % 256
-            jj, ii = np.mgrid[0:24, 0:32]
-            arr = ((m_ + ii * a_ + jj * b_) % 256).astype(np.uint8)
-            out.append(encode_png(arr, filter_mode="cycle"))
-        return pd.Series(out)
+        seed = mid % 40
+        a_, b_, m_ = seed % 7, seed % 5 + 1, (seed * 13) % 256
+        jj, ii = np.mgrid[0:24, 0:32]
+        arr = ((m_ + ii * a_ + jj * b_) % 256).astype(np.uint8)
+        return encode_png(arr, filter_mode="cycle")
 
-    mk_png = F.pandas_udf(_mk, BinaryType())
-    return spark.range(n).select(
-        F.col("id").alias("media_id"), mk_png(F.col("id")).alias("content")
+    return _executor_blobs(spark, n, content=one).select(
+        F.col("id").alias("media_id"), "content"
     )
 
 
@@ -800,52 +788,32 @@ def _formula_rgb_pair_media(spark: SparkSession, n: int):
     """Before/after RGB PNG pairs encoded IN EXECUTORS — the q124
     pattern for the pairwise comparators. Keep the px/pr CTEs of
     Q131_SQL/Q132_SQL in sync with THIS formula."""
-    import pandas as pd
 
-    from odin_rs_spark.deploy import ensure_shipped
-
-    # q131/q132 read no table, so the load_table-side package shipping
-    # never runs — ship explicitly for external-cwd harnesses (q73
-    # precedent)
-    ensure_shipped(spark)
-
-    def _mk(series, after):
+    def one(mid: int, after: bool) -> bytes:
         import numpy as np
 
         from odin_rs_spark.sources.imagecodec import encode_png
 
-        out = []
-        for mid in series:
-            seed = int(mid) % 30
-            a_, b_, m_ = seed % 5 + 1, seed % 3 + 1, (seed * 17) % 200
-            jj, ii = np.mgrid[0:24, 0:32]
-            r = (m_ + ii * a_) % 200
-            g = (m_ + jj * b_) % 200
-            b = (m_ + ii + jj) % 200
-            img = np.stack([r, g, b], axis=-1).astype(np.uint8)
-            if after:
-                smoke = ((ii // 8) + (jj // 8)) % 4 == 0
-                img = np.where(
-                    smoke[..., None], (img.astype(np.int32) + 470) // 3, img
-                ).astype(np.uint8)
-            out.append(encode_png(img, filter_mode="cycle"))
-        return pd.Series(out)
+        seed = mid % 30
+        a_, b_, m_ = seed % 5 + 1, seed % 3 + 1, (seed * 17) % 200
+        jj, ii = np.mgrid[0:24, 0:32]
+        r = (m_ + ii * a_) % 200
+        g = (m_ + jj * b_) % 200
+        b = (m_ + ii + jj) % 200
+        img = np.stack([r, g, b], axis=-1).astype(np.uint8)
+        if after:
+            smoke = ((ii // 8) + (jj // 8)) % 4 == 0
+            img = np.where(
+                smoke[..., None], (img.astype(np.int32) + 470) // 3, img
+            ).astype(np.uint8)
+        return encode_png(img, filter_mode="cycle")
 
-    def _mk_before(series):
-        return _mk(series, after=False)
-
-    def _mk_after(series):
-        return _mk(series, after=True)
-
-    from pyspark.sql.types import BinaryType as _B
-
-    before = F.pandas_udf(_mk_before, _B())
-    after = F.pandas_udf(_mk_after, _B())
-    return spark.range(n).select(
-        F.col("id").alias("media_id"),
-        before(F.col("id")).alias("content_a"),
-        after(F.col("id")).alias("content_b"),
-    )
+    return _executor_blobs(
+        spark,
+        n,
+        content_a=lambda mid: one(mid, after=False),
+        content_b=lambda mid: one(mid, after=True),
+    ).select(F.col("id").alias("media_id"), "content_a", "content_b")
 
 
 def q131_image_structure_ssim(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1136,31 +1104,20 @@ v{r + 1} AS MATERIALIZED (
 # --------------------------------------------------------------------------
 
 def _formula_wav_media(spark: SparkSession, n: int):
-    import pandas as pd
-    from pyspark.sql.types import BinaryType
-
-    from odin_rs_spark.deploy import ensure_shipped
-
-    ensure_shipped(spark)  # no table read -> ship explicitly (q73 precedent)
-
-    def _mk(series):
+    def one(mid: int) -> bytes:
         import numpy as np
 
         from odin_rs_spark.sources.audiocodec import encode_wav
 
-        out = []
-        for mid in series:
-            seed = int(mid) % 25
-            f, ph = seed % 7 + 3, (seed * 11) % 100
-            i = np.arange(2048, dtype=np.int64)
-            s = ((i * f + ph) % 4001) - 2000
-            s[(i // 256) % 4 == 3] = 0
-            out.append(encode_wav(s.astype(np.int16), rate=16000))
-        return pd.Series(out)
+        seed = mid % 25
+        f, ph = seed % 7 + 3, (seed * 11) % 100
+        i = np.arange(2048, dtype=np.int64)
+        s = ((i * f + ph) % 4001) - 2000
+        s[(i // 256) % 4 == 3] = 0
+        return encode_wav(s.astype(np.int16), rate=16000)
 
-    mk = F.pandas_udf(_mk, BinaryType())
-    return spark.range(n).select(
-        F.col("id").alias("media_id"), mk(F.col("id")).alias("content")
+    return _executor_blobs(spark, n, content=one).select(
+        F.col("id").alias("media_id"), "content"
     )
 
 
@@ -1460,35 +1417,22 @@ m{r} AS MATERIALIZED (
 # --------------------------------------------------------------------------
 
 def _formula_avi_media(spark: SparkSession, n: int):
-    import pandas as pd
-    from pyspark.sql.types import BinaryType
-
-    from odin_rs_spark.deploy import ensure_shipped
-
-    ensure_shipped(spark)  # no table read -> ship explicitly
-
-    def _mk(series):
+    def one(mid: int) -> bytes:
         from odin_rs_spark.sources.avicodec import encode_avi
 
-        out = []
-        for mid in series:
-            seed = int(mid) % 20
-            nf = 12 + seed % 5
-            sizes = [50 + (f * 13 + seed * 7) % 150 for f in range(nf)]
-            out.append(
-                encode_avi(
-                    sizes,
-                    width=64 + seed,
-                    height=48,
-                    fps=24,
-                    keyframe_every=4,
-                )
-            )
-        return pd.Series(out)
+        seed = mid % 20
+        nf = 12 + seed % 5
+        sizes = [50 + (f * 13 + seed * 7) % 150 for f in range(nf)]
+        return encode_avi(
+            sizes,
+            width=64 + seed,
+            height=48,
+            fps=24,
+            keyframe_every=4,
+        )
 
-    mk = F.pandas_udf(_mk, BinaryType())
-    return spark.range(n).select(
-        F.col("id").alias("media_id"), mk(F.col("id")).alias("content")
+    return _executor_blobs(spark, n, content=one).select(
+        F.col("id").alias("media_id"), "content"
     )
 
 
@@ -1532,32 +1476,21 @@ FROM fr
 # --------------------------------------------------------------------------
 
 def _formula_jpeg_media(spark: SparkSession, n: int):
-    import pandas as pd
-    from pyspark.sql.types import BinaryType
-
-    from odin_rs_spark.deploy import ensure_shipped
-
-    ensure_shipped(spark)  # no table read -> ship explicitly
-
-    def _mk(series):
+    def one(mid: int) -> bytes:
         import numpy as np
 
         from odin_rs_spark.sources.jpegcodec import encode_jpeg
 
-        out = []
-        for mid in series:
-            seed = int(mid) % 30
-            byy, bxx = np.mgrid[0:3, 0:4]
-            vals = 2 * ((seed * 3 + bxx * 7 + byy * 11) % 100) + 12
-            img = np.repeat(np.repeat(vals, 8, axis=0), 8, axis=1).astype(
-                np.uint8
-            )
-            out.append(encode_jpeg(img))
-        return pd.Series(out)
+        seed = mid % 30
+        byy, bxx = np.mgrid[0:3, 0:4]
+        vals = 2 * ((seed * 3 + bxx * 7 + byy * 11) % 100) + 12
+        img = np.repeat(np.repeat(vals, 8, axis=0), 8, axis=1).astype(
+            np.uint8
+        )
+        return encode_jpeg(img)
 
-    mk = F.pandas_udf(_mk, BinaryType())
-    return spark.range(n).select(
-        F.col("id").alias("media_id"), mk(F.col("id")).alias("content")
+    return _executor_blobs(spark, n, content=one).select(
+        F.col("id").alias("media_id"), "content"
     )
 
 
@@ -1934,42 +1867,29 @@ ON m.media_id = z.media_id
 # --------------------------------------------------------------------------
 
 def _formula_mjpeg_media(spark: SparkSession, n: int):
-    import pandas as pd
-    from pyspark.sql.types import BinaryType
-
-    from odin_rs_spark.deploy import ensure_shipped
-
-    ensure_shipped(spark)  # no table read -> ship explicitly
-
-    def _mk(series):
+    def one(mid: int) -> bytes:
         import numpy as np
 
         from odin_rs_spark.sources.avicodec import encode_avi
         from odin_rs_spark.sources.jpegcodec import encode_jpeg
 
-        out = []
-        for mid in series:
-            seed = int(mid) % 12
-            nf = 6 + seed % 3
-            frames = []
-            for f in range(nf):
-                byy, bxx = np.mgrid[0:3, 0:4]
-                vals = 2 * ((seed * 5 + f * 17 + bxx * 7 + byy * 11) % 100) + 14
-                img = np.repeat(np.repeat(vals, 8, axis=0), 8, axis=1).astype(
-                    np.uint8
-                )
-                frames.append(encode_jpeg(img))
-            out.append(
-                encode_avi(
-                    payloads=frames, width=32, height=24, fps=12,
-                    keyframe_every=3,
-                )
+        seed = mid % 12
+        nf = 6 + seed % 3
+        frames = []
+        for f in range(nf):
+            byy, bxx = np.mgrid[0:3, 0:4]
+            vals = 2 * ((seed * 5 + f * 17 + bxx * 7 + byy * 11) % 100) + 14
+            img = np.repeat(np.repeat(vals, 8, axis=0), 8, axis=1).astype(
+                np.uint8
             )
-        return pd.Series(out)
+            frames.append(encode_jpeg(img))
+        return encode_avi(
+            payloads=frames, width=32, height=24, fps=12,
+            keyframe_every=3,
+        )
 
-    mk = F.pandas_udf(_mk, BinaryType())
-    return spark.range(n).select(
-        F.col("id").alias("media_id"), mk(F.col("id")).alias("content")
+    return _executor_blobs(spark, n, content=one).select(
+        F.col("id").alias("media_id"), "content"
     )
 
 
@@ -2434,38 +2354,25 @@ FROM documents d JOIN s ON d.doc_id = s.doc_id
 # --------------------------------------------------------------------------
 
 def _formula_av_media(spark: SparkSession, n: int):
-    import pandas as pd
-    from pyspark.sql.types import BinaryType
-
-    from odin_rs_spark.deploy import ensure_shipped
-
-    ensure_shipped(spark)  # no table read -> ship explicitly
-
-    def _mk(series):
+    def one(mid: int) -> bytes:
         import numpy as np
 
         from odin_rs_spark.sources.avicodec import encode_avi
 
-        out = []
-        for mid in series:
-            seed = int(mid) % 20
-            t = np.arange(256 + 32 * seed, dtype=np.int64)
-            s = ((t * (seed % 5 + 2) + 13 * seed) % 1601) - 800
-            out.append(
-                encode_avi(
-                    [20, 24],
-                    width=16,
-                    height=16,
-                    audio=s.astype(np.int16),
-                    audio_rate=8000 + 4000 * (seed % 2),
-                    audio_chunks=3,
-                )
-            )
-        return pd.Series(out)
+        seed = mid % 20
+        t = np.arange(256 + 32 * seed, dtype=np.int64)
+        s = ((t * (seed % 5 + 2) + 13 * seed) % 1601) - 800
+        return encode_avi(
+            [20, 24],
+            width=16,
+            height=16,
+            audio=s.astype(np.int16),
+            audio_rate=8000 + 4000 * (seed % 2),
+            audio_chunks=3,
+        )
 
-    mk = F.pandas_udf(_mk, BinaryType())
-    return spark.range(n).select(
-        F.col("id").alias("media_id"), mk(F.col("id")).alias("content")
+    return _executor_blobs(spark, n, content=one).select(
+        F.col("id").alias("media_id"), "content"
     )
 
 
@@ -2646,30 +2553,19 @@ FROM w ORDER BY -ln(u) / n_chars::DOUBLE LIMIT 40
 # --------------------------------------------------------------------------
 
 def _formula_gif_media(spark: SparkSession, n: int):
-    import pandas as pd
-    from pyspark.sql.types import BinaryType
-
-    from odin_rs_spark.deploy import ensure_shipped
-
-    ensure_shipped(spark)  # no table read -> ship explicitly
-
-    def _mk(series):
+    def one(mid: int) -> bytes:
         import numpy as np
 
         from odin_rs_spark.sources.gifcodec import encode_gif
 
-        out = []
-        for mid in series:
-            seed = int(mid) % 35
-            a, b, m = seed % 5, seed % 7 + 1, (seed * 29) % 256
-            ys, xs = np.mgrid[0:24, 0:32]
-            vals = ((m + xs * a + ys * b) % 256).astype(np.uint8)
-            out.append(encode_gif(vals, interlace=bool(int(mid) % 2)))
-        return pd.Series(out)
+        seed = mid % 35
+        a, b, m = seed % 5, seed % 7 + 1, (seed * 29) % 256
+        ys, xs = np.mgrid[0:24, 0:32]
+        vals = ((m + xs * a + ys * b) % 256).astype(np.uint8)
+        return encode_gif(vals, interlace=bool(mid % 2))
 
-    mk = F.pandas_udf(_mk, BinaryType())
-    return spark.range(n).select(
-        F.col("id").alias("media_id"), mk(F.col("id")).alias("content")
+    return _executor_blobs(spark, n, content=one).select(
+        F.col("id").alias("media_id"), "content"
     )
 
 
@@ -3432,30 +3328,19 @@ FROM c GROUP BY 1, 2
 # --------------------------------------------------------------------------
 
 def _formula_ipng_media(spark: SparkSession, n: int):
-    import pandas as pd
-    from pyspark.sql.types import BinaryType
-
-    from odin_rs_spark.deploy import ensure_shipped
-
-    ensure_shipped(spark)  # no table read -> ship explicitly
-
-    def _mk(series):
+    def one(mid: int) -> bytes:
         import numpy as np
 
         from odin_rs_spark.sources.imagecodec import encode_png
 
-        out = []
-        for mid in series:
-            seed = int(mid) % 30
-            a, b, m = seed % 6, seed % 5 + 2, (seed * 41) % 256
-            ys, xs = np.mgrid[0:24, 0:32]
-            vals = ((m + xs * a + ys * b) % 256).astype(np.uint8)
-            out.append(encode_png(vals, filter_mode="cycle", interlace=True))
-        return pd.Series(out)
+        seed = mid % 30
+        a, b, m = seed % 6, seed % 5 + 2, (seed * 41) % 256
+        ys, xs = np.mgrid[0:24, 0:32]
+        vals = ((m + xs * a + ys * b) % 256).astype(np.uint8)
+        return encode_png(vals, filter_mode="cycle", interlace=True)
 
-    mk = F.pandas_udf(_mk, BinaryType())
-    return spark.range(n).select(
-        F.col("id").alias("media_id"), mk(F.col("id")).alias("content")
+    return _executor_blobs(spark, n, content=one).select(
+        F.col("id").alias("media_id"), "content"
     )
 
 
@@ -3500,30 +3385,19 @@ FROM px GROUP BY media_id, tile_x, tile_y
 # --------------------------------------------------------------------------
 
 def _formula_bmp_media(spark: SparkSession, n: int):
-    import pandas as pd
-    from pyspark.sql.types import BinaryType
-
-    from odin_rs_spark.deploy import ensure_shipped
-
-    ensure_shipped(spark)  # no table read -> ship explicitly
-
-    def _mk(series):
+    def one(mid: int) -> bytes:
         import numpy as np
 
         from odin_rs_spark.sources.imagecodec import encode_bmp
 
-        out = []
-        for mid in series:
-            seed = int(mid) % 25
-            a, b, m = seed % 7, seed % 4 + 1, (seed * 53) % 256
-            ys, xs = np.mgrid[0:18, 0:25]
-            vals = ((m + xs * a + ys * b) % 256).astype(np.uint8)
-            out.append(encode_bmp(vals))
-        return pd.Series(out)
+        seed = mid % 25
+        a, b, m = seed % 7, seed % 4 + 1, (seed * 53) % 256
+        ys, xs = np.mgrid[0:18, 0:25]
+        vals = ((m + xs * a + ys * b) % 256).astype(np.uint8)
+        return encode_bmp(vals)
 
-    mk = F.pandas_udf(_mk, BinaryType())
-    return spark.range(n).select(
-        F.col("id").alias("media_id"), mk(F.col("id")).alias("content")
+    return _executor_blobs(spark, n, content=one).select(
+        F.col("id").alias("media_id"), "content"
     )
 
 
@@ -3577,14 +3451,7 @@ FROM t GROUP BY media_id, tile_x, tile_y
 # --------------------------------------------------------------------------
 
 def _formula_mulaw_media(spark: SparkSession, n: int):
-    import pandas as pd
-    from pyspark.sql.types import BinaryType
-
-    from odin_rs_spark.deploy import ensure_shipped
-
-    ensure_shipped(spark)  # no table read -> ship explicitly
-
-    def _mk(series):
+    def one(mid: int) -> bytes:
         import numpy as np
 
         from odin_rs_spark.sources.audiocodec import (
@@ -3592,19 +3459,13 @@ def _formula_mulaw_media(spark: SparkSession, n: int):
             encode_wav_mulaw,
         )
 
-        out = []
-        for mid in series:
-            seed = int(mid) % 20
-            t = np.arange(300 + 20 * seed, dtype=np.int64)
-            codes = (t * (seed % 7 + 3) + 11 * seed) % 256
-            out.append(
-                encode_wav_mulaw(MULAW_TABLE[codes].astype(np.int16), rate=8000)
-            )
-        return pd.Series(out)
+        seed = mid % 20
+        t = np.arange(300 + 20 * seed, dtype=np.int64)
+        codes = (t * (seed % 7 + 3) + 11 * seed) % 256
+        return encode_wav_mulaw(MULAW_TABLE[codes].astype(np.int16), rate=8000)
 
-    mk = F.pandas_udf(_mk, BinaryType())
-    return spark.range(n).select(
-        F.col("id").alias("media_id"), mk(F.col("id")).alias("content")
+    return _executor_blobs(spark, n, content=one).select(
+        F.col("id").alias("media_id"), "content"
     )
 
 
@@ -3671,14 +3532,7 @@ ON m.media_id = z.media_id
 # --------------------------------------------------------------------------
 
 def _formula_alaw_media(spark: SparkSession, n: int):
-    import pandas as pd
-    from pyspark.sql.types import BinaryType
-
-    from odin_rs_spark.deploy import ensure_shipped
-
-    ensure_shipped(spark)  # no table read -> ship explicitly
-
-    def _mk(series):
+    def one(mid: int) -> bytes:
         import numpy as np
 
         from odin_rs_spark.sources.audiocodec import (
@@ -3686,19 +3540,13 @@ def _formula_alaw_media(spark: SparkSession, n: int):
             encode_wav_alaw,
         )
 
-        out = []
-        for mid in series:
-            seed = int(mid) % 20
-            t = np.arange(280 + 24 * seed, dtype=np.int64)
-            codes = (t * (seed % 5 + 2) + 7 * seed) % 256
-            out.append(
-                encode_wav_alaw(ALAW_TABLE[codes].astype(np.int16), rate=8000)
-            )
-        return pd.Series(out)
+        seed = mid % 20
+        t = np.arange(280 + 24 * seed, dtype=np.int64)
+        codes = (t * (seed % 5 + 2) + 7 * seed) % 256
+        return encode_wav_alaw(ALAW_TABLE[codes].astype(np.int16), rate=8000)
 
-    mk = F.pandas_udf(_mk, BinaryType())
-    return spark.range(n).select(
-        F.col("id").alias("media_id"), mk(F.col("id")).alias("content")
+    return _executor_blobs(spark, n, content=one).select(
+        F.col("id").alias("media_id"), "content"
     )
 
 
@@ -3971,36 +3819,25 @@ FROM c GROUP BY 1, 2
 # --------------------------------------------------------------------------
 
 def _formula_progressive_media(spark: SparkSession, n: int):
-    import pandas as pd
-    from pyspark.sql.types import BinaryType
-
-    from odin_rs_spark.deploy import ensure_shipped
-
-    ensure_shipped(spark)  # no table read -> ship explicitly
-
-    def _mk(series):
+    def one(mid: int) -> bytes:
         import numpy as np
 
         from odin_rs_spark.sources.jpegcodec import encode_jpeg_progressive
 
-        out = []
-        for mid in series:
-            seed = int(mid) % 30
-            byy, bxx = np.mgrid[0:4, 0:4]
-            vals = 2 * ((seed * 3 + bxx * 7 + byy * 11) % 100) + 12
-            img = np.repeat(np.repeat(vals, 8, axis=0), 8, axis=1).astype(
-                np.uint8
-            )
-            if int(mid) % 2:
-                rgb = np.stack([img, img, img], axis=-1)
-                out.append(encode_jpeg_progressive(rgb, subsampling="420"))
-            else:
-                out.append(encode_jpeg_progressive(img))
-        return pd.Series(out)
+        seed = mid % 30
+        byy, bxx = np.mgrid[0:4, 0:4]
+        vals = 2 * ((seed * 3 + bxx * 7 + byy * 11) % 100) + 12
+        img = np.repeat(np.repeat(vals, 8, axis=0), 8, axis=1).astype(
+            np.uint8
+        )
+        if mid % 2:
+            rgb = np.stack([img, img, img], axis=-1)
+            return encode_jpeg_progressive(rgb, subsampling="420")
+        else:
+            return encode_jpeg_progressive(img)
 
-    mk = F.pandas_udf(_mk, BinaryType())
-    return spark.range(n).select(
-        F.col("id").alias("media_id"), mk(F.col("id")).alias("content")
+    return _executor_blobs(spark, n, content=one).select(
+        F.col("id").alias("media_id"), "content"
     )
 
 

@@ -18,38 +18,26 @@ from odin_rs_spark.plans.catalog_media import *  # noqa: F401,F403
 # --------------------------------------------------------------------------
 
 def _formula_pdf_media(spark: SparkSession, n: int):
-    import pandas as pd
-    from pyspark.sql.types import BinaryType
-
-    from odin_rs_spark.deploy import ensure_shipped
-
-    ensure_shipped(spark)  # no table read -> ship explicitly
-
-    def _mk(series):
+    def one(mid: int) -> bytes:
         from odin_rs_spark.sources.pdfcodec import encode_pdf
 
-        out = []
-        for mid in series:
-            mid = int(mid)
-            pages = []
-            for p in range(1 + mid % 3):
-                lines = []
-                for j in range(1 + (mid + p) % 3):
-                    words = [
-                        f"pw{(mid * 7 + p * 3 + j * 5 + w) % 19}"
-                        for w in range(6 + (mid + p + j) % 4)
-                    ]
-                    lines.append(" ".join(words))
-                pages.append(lines)
-            out.append(encode_pdf(pages, compress=mid % 2 == 0))
-        return pd.Series(out)
+        pages = []
+        for p in range(1 + mid % 3):
+            lines = []
+            for j in range(1 + (mid + p) % 3):
+                words = [
+                    f"pw{(mid * 7 + p * 3 + j * 5 + w) % 19}"
+                    for w in range(6 + (mid + p + j) % 4)
+                ]
+                lines.append(" ".join(words))
+            pages.append(lines)
+        return encode_pdf(pages, compress=mid % 2 == 0)
 
-    mk = F.pandas_udf(_mk, BinaryType())
-    return spark.range(n).select(
+    return _executor_blobs(spark, n, content=one).select(
         F.concat(
             F.lit("doc"), F.lpad(F.col("id").cast("string"), 2, "0"), F.lit(".pdf")
         ).alias("path"),
-        mk(F.col("id")).alias("content"),
+        "content",
     )
 
 
@@ -208,42 +196,30 @@ FROM c GROUP BY domain
 # --------------------------------------------------------------------------
 
 def _q182_media(spark: SparkSession):
-    import pandas as pd
-    from pyspark.sql.types import BinaryType
-
-    from odin_rs_spark.deploy import ensure_shipped
-
-    ensure_shipped(spark)
-
-    def _mk(series):
+    def one(fno: int) -> bytes:
         from odin_rs_spark.sources.warc import encode_warc
 
-        out = []
-        for fno in series:
-            fno = int(fno)
-            recs = [
-                {"warc_type": "warcinfo", "block": b"software: wet-fixture\r\n"}
-            ]
-            for p in range(8):
-                g = fno * 8 + p
-                body = " ".join(
-                    f"tok{(g * 5 + j) % 13}" for j in range(10 + g % 6)
-                )
-                recs.append(
-                    {
-                        "warc_type": "conversion",
-                        "target_uri": f"https://text{g % 5}.example.org/t/{g}",
-                        "content_type": "text/plain",
-                        "block": body.encode(),
-                    }
-                )
-            out.append(encode_warc(recs))
-        return pd.Series(out)
+        recs = [
+            {"warc_type": "warcinfo", "block": b"software: wet-fixture\r\n"}
+        ]
+        for p in range(8):
+            g = fno * 8 + p
+            body = " ".join(
+                f"tok{(g * 5 + j) % 13}" for j in range(10 + g % 6)
+            )
+            recs.append(
+                {
+                    "warc_type": "conversion",
+                    "target_uri": f"https://text{g % 5}.example.org/t/{g}",
+                    "content_type": "text/plain",
+                    "block": body.encode(),
+                }
+            )
+        return encode_warc(recs)
 
-    mk = F.pandas_udf(_mk, BinaryType())
-    return spark.range(3).select(
+    return _executor_blobs(spark, 3, content=one).select(
         F.concat(F.lit("wet_"), F.col("id").cast("string"), F.lit(".warc.gz")).alias("path"),
-        mk(F.col("id")).alias("content"),
+        "content",
     )
 
 
@@ -298,10 +274,6 @@ FROM b
 # --------------------------------------------------------------------------
 
 def q183_wat_links(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-    from pyspark.sql.types import BinaryType
-
-    from odin_rs_spark.deploy import ensure_shipped
     from odin_rs_spark.functions.web import (
         host_of,
         load_psl,
@@ -309,50 +281,43 @@ def q183_wat_links(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from odin_rs_spark.sources.warc import warc_records
 
-    ensure_shipped(spark)
-
-    def _mk(series):
+    def one(fno: int) -> bytes:
         import json as _json
 
         from odin_rs_spark.sources.warc import encode_warc
 
-        out = []
-        for fno in series:
-            fno = int(fno)
-            recs = [
-                {"warc_type": "warcinfo", "block": b"software: wat-fixture\r\n"}
-            ]
-            for p in range(9):
-                g = fno * 9 + p
-                uri = f"https://h{g % 4}.site{g % 3}.co.uk/p/{g}"
-                links = [
-                    {
-                        "url": f"https://h{j}.site{(g + 2 * j + 1) % 5}"
-                        f".co.uk/l/{g}/{j}"
-                    }
-                    for j in range(3 + g % 3)
-                ]
-                env = {
-                    "Envelope": {
-                        "WARC-Header-Metadata": {"WARC-Target-URI": uri},
-                        "Payload-Metadata": {"Links": links},
-                    }
+        recs = [
+            {"warc_type": "warcinfo", "block": b"software: wat-fixture\r\n"}
+        ]
+        for p in range(9):
+            g = fno * 9 + p
+            uri = f"https://h{g % 4}.site{g % 3}.co.uk/p/{g}"
+            links = [
+                {
+                    "url": f"https://h{j}.site{(g + 2 * j + 1) % 5}"
+                    f".co.uk/l/{g}/{j}"
                 }
-                recs.append(
-                    {
-                        "warc_type": "metadata",
-                        "target_uri": uri,
-                        "content_type": "application/json",
-                        "block": _json.dumps(env).encode(),
-                    }
-                )
-            out.append(encode_warc(recs))
-        return pd.Series(out)
+                for j in range(3 + g % 3)
+            ]
+            env = {
+                "Envelope": {
+                    "WARC-Header-Metadata": {"WARC-Target-URI": uri},
+                    "Payload-Metadata": {"Links": links},
+                }
+            }
+            recs.append(
+                {
+                    "warc_type": "metadata",
+                    "target_uri": uri,
+                    "content_type": "application/json",
+                    "block": _json.dumps(env).encode(),
+                }
+            )
+        return encode_warc(recs)
 
-    mk = F.pandas_udf(_mk, BinaryType())
-    files = spark.range(2).select(
+    files = _executor_blobs(spark, 2, content=one).select(
         F.concat(F.lit("wat_"), F.col("id").cast("string"), F.lit(".warc.gz")).alias("path"),
-        mk(F.col("id")).alias("content"),
+        "content",
     )
     recs = warc_records(files).filter(F.col("warc_type") == "metadata")
     schema = (
@@ -495,58 +460,47 @@ FROM r GROUP BY domain
 # --------------------------------------------------------------------------
 
 def q185_charset_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-    from pyspark.sql.types import BinaryType
-
-    from odin_rs_spark.deploy import ensure_shipped
     from odin_rs_spark.sources.warc import warc_records
 
-    ensure_shipped(spark)
-
-    def _mk(series):
+    def one(fno: int) -> bytes:
         from odin_rs_spark.sources.warc import (
             encode_http_response,
             encode_warc,
         )
 
-        out = []
-        for fno in series:
-            fno = int(fno)
-            recs = [
-                {"warc_type": "warcinfo", "block": b"software: cs-fixture\r\n"}
-            ]
-            for p in range(8):
-                g = fno * 8 + p
-                m = g % 4
-                if m == 0:
-                    body = f"w{g} caf\xe9 €{g}".encode("cp1252")
-                    mime = "text/html; charset=windows-1252"
-                elif m == 1:
-                    body = (
-                        f'<meta charset="iso-8859-1"> caf\xe9 {g}'
-                    ).encode("latin-1")
-                    mime = "text/html"
-                elif m == 2:
-                    body = f"plain utf8 caf\xe9 {g}".encode("utf-8")
-                    mime = "text/html"
-                else:
-                    body = b"bad \xe9 byte " + str(g).encode()
-                    mime = "text/html; charset=utf-8"
-                recs.append(
-                    {
-                        "warc_type": "response",
-                        "target_uri": f"https://cs{g % 3}.example.org/p/{g}",
-                        "content_type": "application/http; msgtype=response",
-                        "block": encode_http_response(body, mime=mime),
-                    }
-                )
-            out.append(encode_warc(recs))
-        return pd.Series(out)
+        recs = [
+            {"warc_type": "warcinfo", "block": b"software: cs-fixture\r\n"}
+        ]
+        for p in range(8):
+            g = fno * 8 + p
+            m = g % 4
+            if m == 0:
+                body = f"w{g} caf\xe9 €{g}".encode("cp1252")
+                mime = "text/html; charset=windows-1252"
+            elif m == 1:
+                body = (
+                    f'<meta charset="iso-8859-1"> caf\xe9 {g}'
+                ).encode("latin-1")
+                mime = "text/html"
+            elif m == 2:
+                body = f"plain utf8 caf\xe9 {g}".encode("utf-8")
+                mime = "text/html"
+            else:
+                body = b"bad \xe9 byte " + str(g).encode()
+                mime = "text/html; charset=utf-8"
+            recs.append(
+                {
+                    "warc_type": "response",
+                    "target_uri": f"https://cs{g % 3}.example.org/p/{g}",
+                    "content_type": "application/http; msgtype=response",
+                    "block": encode_http_response(body, mime=mime),
+                }
+            )
+        return encode_warc(recs)
 
-    mk = F.pandas_udf(_mk, BinaryType())
-    files = spark.range(2).select(
+    files = _executor_blobs(spark, 2, content=one).select(
         F.concat(F.lit("cs_"), F.col("id").cast("string"), F.lit(".warc.gz")).alias("path"),
-        mk(F.col("id")).alias("content"),
+        "content",
     )
     recs = warc_records(files).filter(F.col("warc_type") == "response")
     return recs.select(
@@ -744,41 +698,28 @@ FROM cap GROUP BY urlkey
 # --------------------------------------------------------------------------
 
 def q188_pdf_objstm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-    from pyspark.sql.types import BinaryType
-
-    from odin_rs_spark.deploy import ensure_shipped
     from odin_rs_spark.sources.pdfcodec import pdf_pages
 
-    ensure_shipped(spark)
-
-    def _mk(series):
+    def one(mid: int) -> bytes:
         from odin_rs_spark.sources.pdfcodec import encode_pdf
 
-        out = []
-        for mid in series:
-            mid = int(mid)
-            pages = []
-            for p in range(1 + mid % 3):
-                lines = []
-                for j in range(1 + (mid + p) % 3):
-                    words = [
-                        f"sw{(mid * 11 + p * 5 + j * 3 + w) % 17}"
-                        for w in range(5 + (mid + p + j) % 4)
-                    ]
-                    lines.append(" ".join(words))
-                pages.append(lines)
-            out.append(
-                encode_pdf(pages, compress=mid % 2 == 0, use_objstm=True)
-            )
-        return pd.Series(out)
+        pages = []
+        for p in range(1 + mid % 3):
+            lines = []
+            for j in range(1 + (mid + p) % 3):
+                words = [
+                    f"sw{(mid * 11 + p * 5 + j * 3 + w) % 17}"
+                    for w in range(5 + (mid + p + j) % 4)
+                ]
+                lines.append(" ".join(words))
+            pages.append(lines)
+        return encode_pdf(pages, compress=mid % 2 == 0, use_objstm=True)
 
-    mk = F.pandas_udf(_mk, BinaryType())
-    media = spark.range(40).select(
+    media = _executor_blobs(spark, 40, content=one).select(
         F.concat(
             F.lit("os"), F.lpad(F.col("id").cast("string"), 2, "0"), F.lit(".pdf")
         ).alias("path"),
-        mk(F.col("id")).alias("content"),
+        "content",
     )
     return pdf_pages(media).select(
         "file", "page_no", "n_pages", "text", "n_chars"
@@ -821,46 +762,35 @@ FROM pt
 # --------------------------------------------------------------------------
 
 def q189_exif_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-    from pyspark.sql.types import BinaryType
-
-    from odin_rs_spark.deploy import ensure_shipped
     from odin_rs_spark.operators.multimodal import exif_stats
 
-    ensure_shipped(spark)
-
-    def _mk(series):
+    def one(mid: int) -> bytes:
         import numpy as np
 
         from odin_rs_spark.sources.exif import encode_exif_app1, insert_app1
         from odin_rs_spark.sources.jpegcodec import encode_jpeg
 
-        out = []
-        for mid in series:
-            mid = int(mid)
-            img = np.full((16, 16), 100 + 2 * (mid % 60), np.uint8)
-            base = encode_jpeg(img)
-            gps = None
-            if mid % 3 == 0:
-                lat = (mid % 80) + (mid % 55) / 60 + ((mid * 37) % 6000) / 100 / 3600
-                lon = (mid % 170) + ((mid * 3) % 58) / 60 + ((mid * 53) % 6000) / 100 / 3600
-                if mid % 2 == 0:
-                    lon = -lon
-                gps = (lat, lon)
-            app1 = encode_exif_app1(
-                make=f"Cam{mid % 5}",
-                model=f"M{mid % 4}",
-                orientation=1 + mid % 8,
-                datetime=f"2026:08:{1 + mid % 28:02d} 10:00:00",
-                gps=gps,
-                byte_order="<" if mid % 2 == 0 else ">",
-            )
-            out.append(insert_app1(base, app1))
-        return pd.Series(out)
+        img = np.full((16, 16), 100 + 2 * (mid % 60), np.uint8)
+        base = encode_jpeg(img)
+        gps = None
+        if mid % 3 == 0:
+            lat = (mid % 80) + (mid % 55) / 60 + ((mid * 37) % 6000) / 100 / 3600
+            lon = (mid % 170) + ((mid * 3) % 58) / 60 + ((mid * 53) % 6000) / 100 / 3600
+            if mid % 2 == 0:
+                lon = -lon
+            gps = (lat, lon)
+        app1 = encode_exif_app1(
+            make=f"Cam{mid % 5}",
+            model=f"M{mid % 4}",
+            orientation=1 + mid % 8,
+            datetime=f"2026:08:{1 + mid % 28:02d} 10:00:00",
+            gps=gps,
+            byte_order="<" if mid % 2 == 0 else ">",
+        )
+        return insert_app1(base, app1)
 
-    mk = F.pandas_udf(_mk, BinaryType())
-    media = spark.range(60).select(
-        F.col("id").alias("media_id"), mk(F.col("id")).alias("content")
+    media = _executor_blobs(spark, 60, content=one).select(
+        F.col("id").alias("media_id"), "content"
     )
     out = exif_stats(media)
     return out.select(
@@ -913,39 +843,27 @@ FROM m
 # --------------------------------------------------------------------------
 
 def q190_oriented_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-    from pyspark.sql.types import BinaryType
-
-    from odin_rs_spark.deploy import ensure_shipped
     from odin_rs_spark.operators.multimodal import image_oriented_stats
 
-    ensure_shipped(spark)
-
-    def _mk(series):
+    def one(mid: int) -> bytes:
         import numpy as np
 
         from odin_rs_spark.sources.exif import encode_exif_app1, insert_app1
         from odin_rs_spark.sources.jpegcodec import encode_jpeg
 
-        out = []
-        for mid in series:
-            mid = int(mid)
-            byy, bxx = np.mgrid[0:4, 0:4]
-            vals = 2 * ((3 * bxx + 7 * byy + mid) % 100) + 14
-            img = np.repeat(np.repeat(vals, 8, 0), 8, 1).astype(np.uint8)
-            j = insert_app1(
-                encode_jpeg(img),
-                encode_exif_app1(
-                    orientation=1 + mid % 8,
-                    byte_order="<" if mid % 2 == 0 else ">",
-                ),
-            )
-            out.append(j)
-        return pd.Series(out)
+        byy, bxx = np.mgrid[0:4, 0:4]
+        vals = 2 * ((3 * bxx + 7 * byy + mid) % 100) + 14
+        img = np.repeat(np.repeat(vals, 8, 0), 8, 1).astype(np.uint8)
+        return insert_app1(
+            encode_jpeg(img),
+            encode_exif_app1(
+                orientation=1 + mid % 8,
+                byte_order="<" if mid % 2 == 0 else ">",
+            ),
+        )
 
-    mk = F.pandas_udf(_mk, BinaryType())
-    media = spark.range(64).select(
-        F.col("id").alias("media_id"), mk(F.col("id")).alias("content")
+    media = _executor_blobs(spark, 64, content=one).select(
+        F.col("id").alias("media_id"), "content"
     )
     return image_oriented_stats(media, nx=2, ny=2)
 
@@ -990,39 +908,27 @@ FROM s
 # --------------------------------------------------------------------------
 
 def _q191_media(spark: SparkSession):
-    import pandas as pd
-    from pyspark.sql.types import BinaryType
-
-    from odin_rs_spark.deploy import ensure_shipped
-
-    ensure_shipped(spark)
-
-    def _mk(series):
+    def one(mid: int) -> bytes:
         from odin_rs_spark.sources.officedoc import encode_docx
 
-        out = []
-        for mid in series:
-            mid = int(mid)
-            paras = []
-            for p in range(1 + mid % 4):
-                words = [
-                    f"dw{(mid * 13 + p * 7 + w) % 23}"
-                    for w in range(5 + (mid + p) % 5)
-                ]
-                t = " ".join(words)
-                if (mid + p) % 3 == 0:
-                    t += " & <x>"
-                paras.append(t)
-            out.append(encode_docx(paras, compress=mid % 2 == 0))
-        return pd.Series(out)
+        paras = []
+        for p in range(1 + mid % 4):
+            words = [
+                f"dw{(mid * 13 + p * 7 + w) % 23}"
+                for w in range(5 + (mid + p) % 5)
+            ]
+            t = " ".join(words)
+            if (mid + p) % 3 == 0:
+                t += " & <x>"
+            paras.append(t)
+        return encode_docx(paras, compress=mid % 2 == 0)
 
-    mk = F.pandas_udf(_mk, BinaryType())
-    return spark.range(40).select(
+    return _executor_blobs(spark, 40, content=one).select(
         F.concat(
             F.lit("dx"), F.lpad(F.col("id").cast("string"), 2, "0"),
             F.lit(".docx"),
         ).alias("path"),
-        mk(F.col("id")).alias("content"),
+        "content",
     )
 
 
@@ -1246,46 +1152,32 @@ _Q194_SUFFIX = ["", " café €", " é—", " αβγ☃"]
 
 
 def _q194_media(spark: SparkSession):
-    import pandas as pd
-    from pyspark.sql.types import BinaryType
-
-    from odin_rs_spark.deploy import ensure_shipped
-
-    ensure_shipped(spark)
-
-    def _mk(series):
+    def one(mid: int) -> bytes:
         from odin_rs_spark.sources.pdfcodec import encode_pdf
 
-        out = []
-        for mid in series:
-            mid = int(mid)
-            mode = mid % 4
-            pages = []
-            for p in range(1 + mid % 2):
-                lines = []
-                for j in range(1 + (mid + p) % 2):
-                    words = [
-                        f"fw{(mid * 5 + p * 3 + j * 2 + w) % 17}"
-                        for w in range(4 + (mid + j) % 3)
-                    ]
-                    lines.append(" ".join(words) + _Q194_SUFFIX[mode])
-                pages.append(lines)
-            out.append(
-                encode_pdf(
-                    pages,
-                    compress=mid % 2 == 0,
-                    font_spec=_Q194_FONT_SPECS[mode],
-                )
-            )
-        return pd.Series(out)
+        mode = mid % 4
+        pages = []
+        for p in range(1 + mid % 2):
+            lines = []
+            for j in range(1 + (mid + p) % 2):
+                words = [
+                    f"fw{(mid * 5 + p * 3 + j * 2 + w) % 17}"
+                    for w in range(4 + (mid + j) % 3)
+                ]
+                lines.append(" ".join(words) + _Q194_SUFFIX[mode])
+            pages.append(lines)
+        return encode_pdf(
+            pages,
+            compress=mid % 2 == 0,
+            font_spec=_Q194_FONT_SPECS[mode],
+        )
 
-    mk = F.pandas_udf(_mk, BinaryType())
-    return spark.range(40).select(
+    return _executor_blobs(spark, 40, content=one).select(
         F.concat(
             F.lit("fd"), F.lpad(F.col("id").cast("string"), 2, "0"),
             F.lit(".pdf"),
         ).alias("path"),
-        mk(F.col("id")).alias("content"),
+        "content",
     )
 
 
@@ -1334,49 +1226,37 @@ FROM pt
 # --------------------------------------------------------------------------
 
 def _q195_media(spark: SparkSession):
-    import pandas as pd
-    from pyspark.sql.types import BinaryType
-
-    from odin_rs_spark.deploy import ensure_shipped
-
-    ensure_shipped(spark)
-
-    def _mk(series):
+    def one(mid: int) -> bytes:
         from odin_rs_spark.sources.officedoc import encode_xlsx
 
-        out = []
-        for mid in series:
-            mid = int(mid)
-            sheets = []
-            for s in range(1 + mid % 2):
-                rows = []
-                for r in range(2 + (mid + s) % 3):
-                    cells = []
-                    for c in range(3):
-                        if (mid + s + r + c) % 11 == 0:
-                            cells.append(None)
-                            continue
-                        m = (mid + s + r + c) % 4
-                        if m == 0:
-                            cells.append(f"sv{(mid * 3 + s + r * 2 + c) % 7}")
-                        elif m == 1:
-                            cells.append((mid * 5 + r * 3 + c) % 100)
-                        elif m == 2:
-                            cells.append(f"in&{(c + r) % 5}".encode())
-                        else:
-                            cells.append((mid + r + c) % 2 == 0)
-                    rows.append(cells)
-                sheets.append((f"Sh{s}", rows))
-            out.append(encode_xlsx(sheets, compress=mid % 2 == 0))
-        return pd.Series(out)
+        sheets = []
+        for s in range(1 + mid % 2):
+            rows = []
+            for r in range(2 + (mid + s) % 3):
+                cells = []
+                for c in range(3):
+                    if (mid + s + r + c) % 11 == 0:
+                        cells.append(None)
+                        continue
+                    m = (mid + s + r + c) % 4
+                    if m == 0:
+                        cells.append(f"sv{(mid * 3 + s + r * 2 + c) % 7}")
+                    elif m == 1:
+                        cells.append((mid * 5 + r * 3 + c) % 100)
+                    elif m == 2:
+                        cells.append(f"in&{(c + r) % 5}".encode())
+                    else:
+                        cells.append((mid + r + c) % 2 == 0)
+                rows.append(cells)
+            sheets.append((f"Sh{s}", rows))
+        return encode_xlsx(sheets, compress=mid % 2 == 0)
 
-    mk = F.pandas_udf(_mk, BinaryType())
-    return spark.range(30).select(
+    return _executor_blobs(spark, 30, content=one).select(
         F.concat(
             F.lit("wb"), F.lpad(F.col("id").cast("string"), 2, "0"),
             F.lit(".xlsx"),
         ).alias("path"),
-        mk(F.col("id")).alias("content"),
+        "content",
     )
 
 
@@ -1421,42 +1301,30 @@ FROM cl
 # --------------------------------------------------------------------------
 
 def _q196_media(spark: SparkSession):
-    import pandas as pd
-    from pyspark.sql.types import BinaryType
-
-    from odin_rs_spark.deploy import ensure_shipped
-
-    ensure_shipped(spark)
-
-    def _mk(series):
+    def one(mid: int) -> bytes:
         from odin_rs_spark.sources.officedoc import encode_pptx
 
-        out = []
-        for mid in series:
-            mid = int(mid)
-            slides = []
-            for sl in range(1 + mid % 3):
-                paras = []
-                for k in range(1 + (mid + sl) % 2):
-                    words = [
-                        f"pv{(mid * 7 + sl * 3 + k * 2 + w) % 11}"
-                        for w in range(3 + (mid + k) % 2)
-                    ]
-                    t = " ".join(words)
-                    if (mid + sl + k) % 3 == 0:
-                        t += " & <t>"
-                    paras.append(t)
-                slides.append(paras)
-            out.append(encode_pptx(slides, compress=mid % 2 == 0))
-        return pd.Series(out)
+        slides = []
+        for sl in range(1 + mid % 3):
+            paras = []
+            for k in range(1 + (mid + sl) % 2):
+                words = [
+                    f"pv{(mid * 7 + sl * 3 + k * 2 + w) % 11}"
+                    for w in range(3 + (mid + k) % 2)
+                ]
+                t = " ".join(words)
+                if (mid + sl + k) % 3 == 0:
+                    t += " & <t>"
+                paras.append(t)
+            slides.append(paras)
+        return encode_pptx(slides, compress=mid % 2 == 0)
 
-    mk = F.pandas_udf(_mk, BinaryType())
-    return spark.range(30).select(
+    return _executor_blobs(spark, 30, content=one).select(
         F.concat(
             F.lit("pz"), F.lpad(F.col("id").cast("string"), 2, "0"),
             F.lit(".pptx"),
         ).alias("path"),
-        mk(F.col("id")).alias("content"),
+        "content",
     )
 
 
@@ -1506,62 +1374,50 @@ FROM st
 # --------------------------------------------------------------------------
 
 def _q197_media(spark: SparkSession):
-    import pandas as pd
-    from pyspark.sql.types import BinaryType
-
-    from odin_rs_spark.deploy import ensure_shipped
-
-    ensure_shipped(spark)
-
-    def _mk(series):
+    def one(fno: int) -> bytes:
         from odin_rs_spark.sources.warc import encode_warc
 
-        out = []
-        for fno in series:
-            fno = int(fno)
-            recs = [
-                {"warc_type": "warcinfo", "block": b"software: rv-fixture\r\n"}
-            ]
-            for p in range(12):
-                g = fno * 12 + p
-                if g % 3 == 2:
-                    d = (g * 7) % 6
-                    recs.append(
-                        {
-                            "warc_type": "revisit",
-                            "target_uri": f"https://crawl{g % 5}.example.net/dup/{g}",
-                            "payload_digest": f"sha1:B{d}",
-                            "refers_to": f"<urn:uuid:orig-{d:04d}>",
-                            "profile": "http://netpreserve.org/warc/1.0/"
-                            "revisit/identical-payload-digest",
-                            "block": b"",
-                        }
-                    )
-                else:
-                    d = g % 5
-                    body = " ".join(f"ob{d * 3 + j}" for j in range(4 + d))
-                    msg = (
-                        f"HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n"
-                        f"Content-Length: {len(body)}\r\n\r\n{body}"
-                    ).encode()
-                    recs.append(
-                        {
-                            "warc_type": "response",
-                            "target_uri": f"https://crawl{g % 5}.example.net/doc/{g}",
-                            "payload_digest": f"sha1:B{d}",
-                            "content_type": "application/http; msgtype=response",
-                            "block": msg,
-                        }
-                    )
-            out.append(encode_warc(recs))
-        return pd.Series(out)
+        recs = [
+            {"warc_type": "warcinfo", "block": b"software: rv-fixture\r\n"}
+        ]
+        for p in range(12):
+            g = fno * 12 + p
+            if g % 3 == 2:
+                d = (g * 7) % 6
+                recs.append(
+                    {
+                        "warc_type": "revisit",
+                        "target_uri": f"https://crawl{g % 5}.example.net/dup/{g}",
+                        "payload_digest": f"sha1:B{d}",
+                        "refers_to": f"<urn:uuid:orig-{d:04d}>",
+                        "profile": "http://netpreserve.org/warc/1.0/"
+                        "revisit/identical-payload-digest",
+                        "block": b"",
+                    }
+                )
+            else:
+                d = g % 5
+                body = " ".join(f"ob{d * 3 + j}" for j in range(4 + d))
+                msg = (
+                    f"HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n"
+                    f"Content-Length: {len(body)}\r\n\r\n{body}"
+                ).encode()
+                recs.append(
+                    {
+                        "warc_type": "response",
+                        "target_uri": f"https://crawl{g % 5}.example.net/doc/{g}",
+                        "payload_digest": f"sha1:B{d}",
+                        "content_type": "application/http; msgtype=response",
+                        "block": msg,
+                    }
+                )
+        return encode_warc(recs)
 
-    mk = F.pandas_udf(_mk, BinaryType())
-    return spark.range(2).select(
+    return _executor_blobs(spark, 2, content=one).select(
         F.concat(
             F.lit("cc3_0"), F.col("id").cast("string"), F.lit(".warc.gz")
         ).alias("path"),
-        mk(F.col("id")).alias("content"),
+        "content",
     )
 
 
@@ -1623,71 +1479,59 @@ FROM rev LEFT JOIN ob ON rev.d = ob.d LEFT JOIN bt ON rev.d = bt.d
 # --------------------------------------------------------------------------
 
 def _q198_media(spark: SparkSession):
-    import pandas as pd
-    from pyspark.sql.types import BinaryType
-
-    from odin_rs_spark.deploy import ensure_shipped
-
-    ensure_shipped(spark)
-
-    def _mk(series):
+    def one(fno: int) -> bytes:
         from odin_rs_spark.sources.warc import (
             encode_http_response,
             encode_warc,
         )
 
-        out = []
-        for fno in series:
-            fno = int(fno)
-            recs = [
-                {"warc_type": "warcinfo", "block": b"software: au-fixture\r\n"}
-            ]
-            for p in range(10):
-                g = fno * 10 + p
-                body = " ".join(f"ab{(g * 3 + j) % 9}" for j in range(5 + g % 4))
-                mode = g % 5
-                if mode == 2:  # LZW 'compress': the remaining named loss
-                    raw = b"\x1f\x9d\x90" + body.encode()  # opaque bytes
-                    msg = (
-                        f"HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n"
-                        f"Content-Encoding: compress\r\n"
-                        f"Content-Length: {len(raw)}\r\n\r\n"
-                    ).encode() + raw
-                elif mode == 3:  # zstd: REAL coded body since r10
-                    from odin_rs_spark.sources.zstdcodec import (
-                        zstd_compress_store,
-                    )
-
-                    raw = zstd_compress_store(body.encode())
-                    msg = (
-                        f"HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n"
-                        f"Content-Encoding: zstd\r\n"
-                        f"Content-Length: {len(raw)}\r\n\r\n"
-                    ).encode() + raw
-                else:
-                    msg = encode_http_response(
-                        body.encode(),
-                        chunked=mode == 4,
-                        content_encoding={0: None, 1: "gzip", 4: "deflate"}[mode],
-                        chunk_size=6 + g % 3,
-                    )
-                recs.append(
-                    {
-                        "warc_type": "response",
-                        "target_uri": f"https://au{g % 4}.example.org/p/{g}",
-                        "content_type": "application/http; msgtype=response",
-                        "block": msg,
-                    }
+        recs = [
+            {"warc_type": "warcinfo", "block": b"software: au-fixture\r\n"}
+        ]
+        for p in range(10):
+            g = fno * 10 + p
+            body = " ".join(f"ab{(g * 3 + j) % 9}" for j in range(5 + g % 4))
+            mode = g % 5
+            if mode == 2:  # LZW 'compress': the remaining named loss
+                raw = b"\x1f\x9d\x90" + body.encode()  # opaque bytes
+                msg = (
+                    f"HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n"
+                    f"Content-Encoding: compress\r\n"
+                    f"Content-Length: {len(raw)}\r\n\r\n"
+                ).encode() + raw
+            elif mode == 3:  # zstd: REAL coded body since r10
+                from odin_rs_spark.sources.zstdcodec import (
+                    zstd_compress_store,
                 )
-            out.append(encode_warc(recs))
-        return pd.Series(out)
 
-    mk = F.pandas_udf(_mk, BinaryType())
-    return spark.range(2).select(
+                raw = zstd_compress_store(body.encode())
+                msg = (
+                    f"HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n"
+                    f"Content-Encoding: zstd\r\n"
+                    f"Content-Length: {len(raw)}\r\n\r\n"
+                ).encode() + raw
+            else:
+                msg = encode_http_response(
+                    body.encode(),
+                    chunked=mode == 4,
+                    content_encoding={0: None, 1: "gzip", 4: "deflate"}[mode],
+                    chunk_size=6 + g % 3,
+                )
+            recs.append(
+                {
+                    "warc_type": "response",
+                    "target_uri": f"https://au{g % 4}.example.org/p/{g}",
+                    "content_type": "application/http; msgtype=response",
+                    "block": msg,
+                }
+            )
+        return encode_warc(recs)
+
+    return _executor_blobs(spark, 2, content=one).select(
         F.concat(
             F.lit("au_"), F.col("id").cast("string"), F.lit(".warc.gz")
         ).alias("path"),
-        mk(F.col("id")).alias("content"),
+        "content",
     )
 
 
@@ -1871,41 +1715,29 @@ Q199_SQL = _q199_sql()
 # --------------------------------------------------------------------------
 
 def _q200_media(spark: SparkSession):
-    import pandas as pd
-    from pyspark.sql.types import BinaryType
-
-    from odin_rs_spark.deploy import ensure_shipped
-
-    ensure_shipped(spark)
-
-    def _mk(series):
+    def one(mid: int) -> bytes:
         from odin_rs_spark.sources.pdfcodec import encode_pdf
 
-        out = []
-        for mid in series:
-            mid = int(mid)
-            pages = [[f"mw{(mid + p) % 9}"] for p in range(1 + mid % 3)]
-            info = None
-            if mid % 3 != 1:
-                arrow = " →" if mid % 3 == 0 else ""
-                info = {
-                    "title": f"Report {mid % 11}{arrow}",
-                    "author": f"Author ({mid % 7})",
-                    "creation_date": (
-                        f"D:{2020 + mid % 7}{1 + mid % 12:02d}"
-                        f"{1 + mid % 28:02d}090000Z"
-                    ),
-                }
-            out.append(encode_pdf(pages, compress=mid % 2 == 0, info=info))
-        return pd.Series(out)
+        pages = [[f"mw{(mid + p) % 9}"] for p in range(1 + mid % 3)]
+        info = None
+        if mid % 3 != 1:
+            arrow = " →" if mid % 3 == 0 else ""
+            info = {
+                "title": f"Report {mid % 11}{arrow}",
+                "author": f"Author ({mid % 7})",
+                "creation_date": (
+                    f"D:{2020 + mid % 7}{1 + mid % 12:02d}"
+                    f"{1 + mid % 28:02d}090000Z"
+                ),
+            }
+        return encode_pdf(pages, compress=mid % 2 == 0, info=info)
 
-    mk = F.pandas_udf(_mk, BinaryType())
-    return spark.range(40).select(
+    return _executor_blobs(spark, 40, content=one).select(
         F.concat(
             F.lit("md"), F.lpad(F.col("id").cast("string"), 2, "0"),
             F.lit(".pdf"),
         ).alias("path"),
-        mk(F.col("id")).alias("content"),
+        "content",
     )
 
 
@@ -2638,33 +2470,21 @@ FROM h
 # --------------------------------------------------------------------------
 
 def _q210_media(spark: SparkSession):
-    import pandas as pd
-    from pyspark.sql.types import BinaryType
-
-    from odin_rs_spark.deploy import ensure_shipped
-
-    ensure_shipped(spark)
-
-    def _mk(series):
+    def one(mid: int) -> bytes:
         from odin_rs_spark.sources.officedoc import encode_xlsx
 
-        out = []
-        for mid in series:
-            mid = int(mid)
-            rows = []
-            for r in range(2 + mid % 3):
-                serial = 44000 + (mid * 131 + r * 17) % 3000
-                rows.append([f"ev{(mid + r) % 9}", serial])
-            out.append(encode_xlsx([("Log", rows)], compress=mid % 2 == 0))
-        return pd.Series(out)
+        rows = []
+        for r in range(2 + mid % 3):
+            serial = 44000 + (mid * 131 + r * 17) % 3000
+            rows.append([f"ev{(mid + r) % 9}", serial])
+        return encode_xlsx([("Log", rows)], compress=mid % 2 == 0)
 
-    mk = F.pandas_udf(_mk, BinaryType())
-    return spark.range(30).select(
+    return _executor_blobs(spark, 30, content=one).select(
         F.concat(
             F.lit("dt"), F.lpad(F.col("id").cast("string"), 2, "0"),
             F.lit(".xlsx"),
         ).alias("path"),
-        mk(F.col("id")).alias("content"),
+        "content",
     )
 
 
@@ -2719,42 +2539,27 @@ _Q211_WORDS = [
 
 
 def _q211_media(spark: SparkSession):
-    import pandas as pd
-    from pyspark.sql.types import BinaryType
-
-    from odin_rs_spark.deploy import ensure_shipped
-
-    ensure_shipped(spark)
-
-    def _mk(series):
+    def one(mid: int) -> bytes:
         from odin_rs_spark.sources.pdfcodec import encode_pdf
 
-        out = []
-        for mid in series:
-            mid = int(mid)
-            pages = []
-            for p in range(1 + mid % 2):
-                words = [
-                    _Q211_WORDS[(mid * 3 + p * 5 + j) % 9]
-                    for j in range(4 + (mid + p) % 4)
-                ]
-                pages.append([" ".join(words)])
-            chars = sorted({ch for pg in pages for ln in pg for ch in ln})
-            # arbitrary glyph ids, offset so codes never equal ordinals
-            cid = {17 + k * 3: ch for k, ch in enumerate(chars)}
-            out.append(
-                encode_pdf(pages, compress=mid % 2 == 0,
-                           font_spec={"cid": cid})
-            )
-        return pd.Series(out)
+        pages = []
+        for p in range(1 + mid % 2):
+            words = [
+                _Q211_WORDS[(mid * 3 + p * 5 + j) % 9]
+                for j in range(4 + (mid + p) % 4)
+            ]
+            pages.append([" ".join(words)])
+        chars = sorted({ch for pg in pages for ln in pg for ch in ln})
+        # arbitrary glyph ids, offset so codes never equal ordinals
+        cid = {17 + k * 3: ch for k, ch in enumerate(chars)}
+        return encode_pdf(pages, compress=mid % 2 == 0, font_spec={"cid": cid})
 
-    mk = F.pandas_udf(_mk, BinaryType())
-    return spark.range(40).select(
+    return _executor_blobs(spark, 40, content=one).select(
         F.concat(
             F.lit("cj"), F.lpad(F.col("id").cast("string"), 2, "0"),
             F.lit(".pdf"),
         ).alias("path"),
-        mk(F.col("id")).alias("content"),
+        "content",
     )
 
 
@@ -2933,14 +2738,7 @@ Q212_SQL = _q212_sql()
 # --------------------------------------------------------------------------
 
 def _q213_media(spark: SparkSession):
-    import pandas as pd
-    from pyspark.sql.types import BinaryType
-
-    from odin_rs_spark.deploy import ensure_shipped
-
-    ensure_shipped(spark)
-
-    def _mk(series):
+    def one(fno: int) -> bytes:
         from odin_rs_spark.sources.warc import encode_warc
 
         def resp(uri, status, location=None, body=b""):
@@ -2956,41 +2754,36 @@ def _q213_media(spark: SparkSession):
             }
 
         H = "https://rd.example.org"
-        out = []
-        for fno in series:
-            fno = int(fno)
-            recs = [
-                {"warc_type": "warcinfo", "block": b"software: rd-fixture\r\n"}
-            ]
-            if fno == 0:
-                for k in range(4):
-                    recs.append(
-                        resp(f"{H}/final/{k}", 200, body=f"page {k}".encode())
-                    )
-                for c in range(6):
-                    recs.append(resp(f"{H}/hop/{c}/a", 302, location="b"))
-                    loc = (
-                        f"/final/{c}" if c < 4
-                        else ("/gone" if c == 4 else "/loop/x")
-                    )
-                    recs.append(resp(f"{H}/hop/{c}/b", 301, location=loc))
-            else:
-                recs.append(resp(f"{H}/loop/x", 302, location="/loop/y"))
-                recs.append(resp(f"{H}/loop/y", 302, location="/loop/x"))
-                for i in range(7):
-                    recs.append(
-                        resp(f"{H}/long/{i}", 302, location=f"/long/{i + 1}")
-                    )
-                recs.append(resp(f"{H}/long/7", 200, body=b"end"))
-            out.append(encode_warc(recs))
-        return pd.Series(out)
+        recs = [
+            {"warc_type": "warcinfo", "block": b"software: rd-fixture\r\n"}
+        ]
+        if fno == 0:
+            for k in range(4):
+                recs.append(
+                    resp(f"{H}/final/{k}", 200, body=f"page {k}".encode())
+                )
+            for c in range(6):
+                recs.append(resp(f"{H}/hop/{c}/a", 302, location="b"))
+                loc = (
+                    f"/final/{c}" if c < 4
+                    else ("/gone" if c == 4 else "/loop/x")
+                )
+                recs.append(resp(f"{H}/hop/{c}/b", 301, location=loc))
+        else:
+            recs.append(resp(f"{H}/loop/x", 302, location="/loop/y"))
+            recs.append(resp(f"{H}/loop/y", 302, location="/loop/x"))
+            for i in range(7):
+                recs.append(
+                    resp(f"{H}/long/{i}", 302, location=f"/long/{i + 1}")
+                )
+            recs.append(resp(f"{H}/long/7", 200, body=b"end"))
+        return encode_warc(recs)
 
-    mk = F.pandas_udf(_mk, BinaryType())
-    return spark.range(2).select(
+    return _executor_blobs(spark, 2, content=one).select(
         F.concat(
             F.lit("rd_"), F.col("id").cast("string"), F.lit(".warc.gz")
         ).alias("path"),
-        mk(F.col("id")).alias("content"),
+        "content",
     )
 
 
@@ -3174,14 +2967,7 @@ _Q215_KINDS = (
 
 
 def _q215_media(spark: SparkSession):
-    import pandas as pd
-    from pyspark.sql.types import BinaryType
-
-    from odin_rs_spark.deploy import ensure_shipped
-
-    ensure_shipped(spark)
-
-    def _mk(series):
+    def one(fno: int) -> bytes:
         from odin_rs_spark.sources.warc import encode_warc
 
         payload = (
@@ -3194,39 +2980,34 @@ def _q215_media(spark: SparkSession):
             lambda i: b"PK\x03\x04" + b"zip %d" % i,
             lambda i: b"\x00\x01\x02\x03" + b"bin %d" % i,
         )
-        out = []
-        for fno in series:
-            fno = int(fno)
-            recs = [
-                {"warc_type": "warcinfo", "block": b"software: mime-fixture\r\n"}
-            ]
-            for j in range(24):
-                i = fno * 24 + j
-                k = i % 8
-                d = (k + (1 if i % 3 == 0 else 0)) % 8
-                declared = _Q215_KINDS[d] + (
-                    "; charset=utf-8" if d == 0 else ""
-                )
-                body = payload[k](i)
-                hdrs = (
-                    "HTTP/1.1 200 OK\r\nContent-Type: %s\r\n"
-                    "Content-Length: %d\r\n\r\n" % (declared, len(body))
-                )
-                recs.append({
-                    "warc_type": "response",
-                    "target_uri": f"https://mime.example.org/p/{i}",
-                    "content_type": "application/http; msgtype=response",
-                    "block": hdrs.encode() + body,
-                })
-            out.append(encode_warc(recs))
-        return pd.Series(out)
+        recs = [
+            {"warc_type": "warcinfo", "block": b"software: mime-fixture\r\n"}
+        ]
+        for j in range(24):
+            i = fno * 24 + j
+            k = i % 8
+            d = (k + (1 if i % 3 == 0 else 0)) % 8
+            declared = _Q215_KINDS[d] + (
+                "; charset=utf-8" if d == 0 else ""
+            )
+            body = payload[k](i)
+            hdrs = (
+                "HTTP/1.1 200 OK\r\nContent-Type: %s\r\n"
+                "Content-Length: %d\r\n\r\n" % (declared, len(body))
+            )
+            recs.append({
+                "warc_type": "response",
+                "target_uri": f"https://mime.example.org/p/{i}",
+                "content_type": "application/http; msgtype=response",
+                "block": hdrs.encode() + body,
+            })
+        return encode_warc(recs)
 
-    mk = F.pandas_udf(_mk, BinaryType())
-    return spark.range(2).select(
+    return _executor_blobs(spark, 2, content=one).select(
         F.concat(
             F.lit("mime_"), F.col("id").cast("string"), F.lit(".warc.gz")
         ).alias("path"),
-        mk(F.col("id")).alias("content"),
+        "content",
     )
 
 
@@ -3859,44 +3640,30 @@ FROM v GROUP BY s
 # --------------------------------------------------------------------------
 
 def _formula_tiff_media(spark: SparkSession, n: int):
-    import pandas as pd
-    from pyspark.sql.types import BinaryType
-
-    from odin_rs_spark.deploy import ensure_shipped
-
-    ensure_shipped(spark)  # no table read -> ship explicitly
-
-    def _mk(series):
+    def one(mid: int) -> bytes:
         import numpy as np
 
         from odin_rs_spark.sources.imagecodec import encode_tiff
 
-        out = []
-        for mid in series:
-            mid = int(mid)
-            seed = mid % 25
-            a, b, m = seed % 6 + 1, seed % 5, (seed * 41) % 256
-            ys, xs = np.mgrid[0:18, 0:25]
-            vals = ((m + xs * a + ys * b) % 256).astype(np.uint8)
-            mode = mid % 8
-            if mode == 4:  # chunky RGB, equal channels → same luma
-                img = np.stack([vals, vals, vals], axis=2)
-            else:
-                img = vals
-            out.append(
-                encode_tiff(
-                    img,
-                    packbits=mode in (1, 3, 6),
-                    big_endian=mode in (2, 3, 7),
-                    rows_per_strip=5 if mode in (3, 5, 6) else None,
-                    white_is_zero=mode in (5, 7),
-                )
-            )
-        return pd.Series(out)
+        seed = mid % 25
+        a, b, m = seed % 6 + 1, seed % 5, (seed * 41) % 256
+        ys, xs = np.mgrid[0:18, 0:25]
+        vals = ((m + xs * a + ys * b) % 256).astype(np.uint8)
+        mode = mid % 8
+        if mode == 4:  # chunky RGB, equal channels → same luma
+            img = np.stack([vals, vals, vals], axis=2)
+        else:
+            img = vals
+        return encode_tiff(
+            img,
+            packbits=mode in (1, 3, 6),
+            big_endian=mode in (2, 3, 7),
+            rows_per_strip=5 if mode in (3, 5, 6) else None,
+            white_is_zero=mode in (5, 7),
+        )
 
-    mk = F.pandas_udf(_mk, BinaryType())
-    return spark.range(n).select(
-        F.col("id").alias("media_id"), mk(F.col("id")).alias("content")
+    return _executor_blobs(spark, n, content=one).select(
+        F.col("id").alias("media_id"), "content"
     )
 
 
@@ -4281,60 +4048,48 @@ FROM p GROUP BY 1
 # --------------------------------------------------------------------------
 
 def _q228_media(spark: SparkSession):
-    import pandas as pd
-    from pyspark.sql.types import BinaryType
-
-    from odin_rs_spark.deploy import ensure_shipped
-
-    ensure_shipped(spark)
-
-    def _mk(series):
+    def one(fno: int) -> bytes:
         from odin_rs_spark.sources.warc import encode_warc
 
-        out = []
-        for fno in series:
-            fno = int(fno)
-            recs = [
-                {"warc_type": "warcinfo", "block": b"software: pair-fixture\r\n"}
-            ]
-            for j in range(20):
-                i = fno * 20 + j
-                uri = f"https://pair.example.org/p/{i}"
-                rid = f"<urn:uuid:resp-{i:08d}>"
-                status = 200 + (i % 3) * 100
-                body = b"page %d" % i
-                hdrs = (
-                    "HTTP/1.1 %d X\r\nContent-Type: text/html\r\n"
-                    "Content-Length: %d\r\n\r\n" % (status, len(body))
-                )
-                recs.append({
-                    "warc_type": "response",
-                    "target_uri": uri,
-                    "record_id": rid,
-                    "content_type": "application/http; msgtype=response",
-                    "block": hdrs.encode() + body,
-                })
-                req = (
-                    "GET /p/%d HTTP/1.1\r\nHost: pair.example.org\r\n"
-                    "User-Agent: bot/%d.0\r\nAccept: text/html\r\n\r\n"
-                    % (i, i % 2)
-                )
-                recs.append({
-                    "warc_type": "request",
-                    "target_uri": uri,
-                    "concurrent_to": rid,
-                    "content_type": "application/http; msgtype=request",
-                    "block": req.encode(),
-                })
-            out.append(encode_warc(recs))
-        return pd.Series(out)
+        recs = [
+            {"warc_type": "warcinfo", "block": b"software: pair-fixture\r\n"}
+        ]
+        for j in range(20):
+            i = fno * 20 + j
+            uri = f"https://pair.example.org/p/{i}"
+            rid = f"<urn:uuid:resp-{i:08d}>"
+            status = 200 + (i % 3) * 100
+            body = b"page %d" % i
+            hdrs = (
+                "HTTP/1.1 %d X\r\nContent-Type: text/html\r\n"
+                "Content-Length: %d\r\n\r\n" % (status, len(body))
+            )
+            recs.append({
+                "warc_type": "response",
+                "target_uri": uri,
+                "record_id": rid,
+                "content_type": "application/http; msgtype=response",
+                "block": hdrs.encode() + body,
+            })
+            req = (
+                "GET /p/%d HTTP/1.1\r\nHost: pair.example.org\r\n"
+                "User-Agent: bot/%d.0\r\nAccept: text/html\r\n\r\n"
+                % (i, i % 2)
+            )
+            recs.append({
+                "warc_type": "request",
+                "target_uri": uri,
+                "concurrent_to": rid,
+                "content_type": "application/http; msgtype=request",
+                "block": req.encode(),
+            })
+        return encode_warc(recs)
 
-    mk = F.pandas_udf(_mk, BinaryType())
-    return spark.range(2).select(
+    return _executor_blobs(spark, 2, content=one).select(
         F.concat(
             F.lit("pair_"), F.col("id").cast("string"), F.lit(".warc.gz")
         ).alias("path"),
-        mk(F.col("id")).alias("content"),
+        "content",
     )
 
 
@@ -4385,39 +4140,25 @@ FROM x GROUP BY 1, 2
 # --------------------------------------------------------------------------
 
 def _q229_media(spark: SparkSession):
-    import pandas as pd
-    from pyspark.sql.types import BinaryType
-
-    from odin_rs_spark.deploy import ensure_shipped
-
-    ensure_shipped(spark)
-
-    def _mk(series):
+    def one(mid: int) -> bytes:
         from odin_rs_spark.sources.pdfcodec import encode_pdf
 
-        out = []
-        for mid in series:
-            mid = int(mid)
-            pages = [
-                [f"line {mid} {p} {j}" for j in range(1 + (mid + p) % 2)]
-                for p in range(1 + mid % 3)
-            ]
-            out.append(
-                encode_pdf(
-                    pages,
-                    compress=mid % 2 == 0,
-                    info={"title": f"Doc {mid}"} if mid % 5 != 0 else None,
-                    encrypt_stub=mid % 4 == 0,
-                )
-            )
-        return pd.Series(out)
+        pages = [
+            [f"line {mid} {p} {j}" for j in range(1 + (mid + p) % 2)]
+            for p in range(1 + mid % 3)
+        ]
+        return encode_pdf(
+            pages,
+            compress=mid % 2 == 0,
+            info={"title": f"Doc {mid}"} if mid % 5 != 0 else None,
+            encrypt_stub=mid % 4 == 0,
+        )
 
-    mk = F.pandas_udf(_mk, BinaryType())
-    return spark.range(30).select(
+    return _executor_blobs(spark, 30, content=one).select(
         F.concat(
             F.lit("enc_"), F.col("id").cast("string"), F.lit(".pdf")
         ).alias("path"),
-        mk(F.col("id")).alias("content"),
+        "content",
     )
 
 
@@ -5372,51 +5113,39 @@ Q238_SQL = _q238_sql()
 
 
 def _q239_media(spark: SparkSession):
-    import pandas as pd
-    from pyspark.sql.types import BinaryType
-
-    from odin_rs_spark.deploy import ensure_shipped
-
-    ensure_shipped(spark)
-
-    def _mk(series):
+    def one(mid: int) -> bytes:
         from odin_rs_spark.sources.mail import encode_eml
 
-        out = []
-        for mid in series:
-            mid = int(mid)
-            words = " ".join(
-                f"mb{(mid * 11 + t) % 23}" for t in range(4 + mid % 4)
+        words = " ".join(
+            f"mb{(mid * 11 + t) % 23}" for t in range(4 + mid % 4)
+        )
+        date = (
+            f"{1 + mid % 28} Mar 2024 "
+            f"{mid % 24:02d}:{(mid * 7) % 60:02d}:00 +0{mid % 3}00"
+        )
+        from_addr = f"u{mid % 9}@dom{mid % 5}.example"
+        if mid % 3 == 0:
+            raw = encode_eml(
+                f"Subject {mid % 13}", from_addr, date,
+                [("text/plain", "us-ascii", words)],
             )
-            date = (
-                f"{1 + mid % 28} Mar 2024 "
-                f"{mid % 24:02d}:{(mid * 7) % 60:02d}:00 +0{mid % 3}00"
+        else:
+            parts = [
+                ("text/plain", "utf-8", f"café {words}"),
+                ("text/html", "cp1252", f"<p>déjà {words}</p>"),
+            ]
+            raw = encode_eml(
+                f"Résumé {mid % 13}", from_addr, date, parts,
+                subject_encoding="B" if mid % 3 == 1 else "Q",
+                nested=mid % 3 == 2,
             )
-            from_addr = f"u{mid % 9}@dom{mid % 5}.example"
-            if mid % 3 == 0:
-                raw = encode_eml(
-                    f"Subject {mid % 13}", from_addr, date,
-                    [("text/plain", "us-ascii", words)],
-                )
-            else:
-                parts = [
-                    ("text/plain", "utf-8", f"café {words}"),
-                    ("text/html", "cp1252", f"<p>déjà {words}</p>"),
-                ]
-                raw = encode_eml(
-                    f"Résumé {mid % 13}", from_addr, date, parts,
-                    subject_encoding="B" if mid % 3 == 1 else "Q",
-                    nested=mid % 3 == 2,
-                )
-            out.append(raw)
-        return pd.Series(out)
+        return raw
 
-    mk = F.pandas_udf(_mk, BinaryType())
-    return spark.range(60).select(
+    return _executor_blobs(spark, 60, content=one).select(
         F.concat(
             F.lit("m"), F.lpad(F.col("id").cast("string"), 2, "0"), F.lit(".eml")
         ).alias("path"),
-        mk(F.col("id")).alias("content"),
+        "content",
     )
 
 
@@ -6340,14 +6069,7 @@ _Q249_QUALS = (30, 50, 75, 85, 95)
 
 
 def _q249_media(spark: SparkSession):
-    import pandas as pd
-    from pyspark.sql.types import BinaryType
-
-    from odin_rs_spark.deploy import ensure_shipped
-
-    ensure_shipped(spark)
-
-    def _mk(series):
+    def one(mid: int) -> bytes:
         import numpy as np
 
         from odin_rs_spark.sources.jpegcodec import (
@@ -6355,23 +6077,18 @@ def _q249_media(spark: SparkSession):
             encode_jpeg_progressive,
         )
 
-        out = []
-        for mid in series:
-            mid = int(mid)
-            img = (
-                (np.arange(256).reshape(16, 16) * (1 + mid % 7) + mid) % 200
-                + 20
-            ).astype(np.uint8)
-            q = _Q249_QUALS[mid % 5]
-            if mid % 4 == 0:
-                out.append(encode_jpeg_progressive(img, quality=q))
-            else:
-                out.append(encode_jpeg(img, quality=q))
-        return pd.Series(out)
+        img = (
+            (np.arange(256).reshape(16, 16) * (1 + mid % 7) + mid) % 200
+            + 20
+        ).astype(np.uint8)
+        q = _Q249_QUALS[mid % 5]
+        if mid % 4 == 0:
+            return encode_jpeg_progressive(img, quality=q)
+        else:
+            return encode_jpeg(img, quality=q)
 
-    mk = F.pandas_udf(_mk, BinaryType())
-    return spark.range(60).select(
-        F.col("id").alias("media_id"), mk(F.col("id")).alias("content")
+    return _executor_blobs(spark, 60, content=one).select(
+        F.col("id").alias("media_id"), "content"
     )
 
 

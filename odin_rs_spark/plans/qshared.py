@@ -61,6 +61,32 @@ def _scratch_query(
     return run
 
 
+def _executor_blobs(
+    spark: SparkSession, n: int, **makers: Callable[[int], bytes]
+) -> DataFrame:
+    """spark.range(n)'s id plus one binary column per keyword, cell
+    make(int(id)) computed in executors: the one home of the media
+    fixtures whose DuckDB oracles replay the same per-id formula. The
+    generators read no table, so load_table-side package shipping never
+    runs — ship explicitly for external-cwd harnesses."""
+    import pandas as pd
+    from pyspark.sql.types import BinaryType
+
+    from odin_rs_spark.deploy import ensure_shipped
+
+    ensure_shipped(spark)
+
+    def column(make: Callable[[int], bytes]):
+        def cells(ids):
+            return pd.Series([make(int(i)) for i in ids])
+
+        return F.pandas_udf(cells, BinaryType())
+
+    return spark.range(n).select(
+        "id", *(column(make)("id").alias(name) for name, make in makers.items())
+    )
+
+
 @contextlib.contextmanager
 def _stream_state_parallelism(spark: SparkSession, n: int = 8) -> Iterator[None]:
     """Scope spark.sql.shuffle.partitions for a streaming run. A

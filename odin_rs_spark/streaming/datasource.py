@@ -201,12 +201,13 @@ class RestFeedDataSource(DataSource):
         return _RestFeedReader(schema, self.options)
 
 
-def drain_polling_source(
-    start_run,
-    max_runs: int = 64,
-    timeout_sec: float = 300.0,
-    expected_rows: int | None = None,
-) -> int:
+# drain_polling_source bounds: the most passes one drain runs, and how
+# long one pass may run before the drain treats the feed as stalled
+_DRAIN_MAX_PASSES = 64
+_DRAIN_PASS_TIMEOUT_S = 300.0
+
+
+def drain_polling_source(start_run, expected_rows: int | None = None) -> int:
     """Drain a polling source to quiescence: repeatedly run one
     Trigger.AvailableNow pass (for a SimpleDataSourceStreamReader each
     pass = exactly one poll, because the engine's availableNow wrapper
@@ -228,7 +229,7 @@ def drain_polling_source(
     feeds whose end is genuinely unknown.
     """
     total = 0
-    for i in range(max_runs):
+    for i in range(_DRAIN_MAX_PASSES):
         # the early-out requires at least ONE completed pass (i > 0):
         # expected_rows == 0 (an empty feed) must still run the single
         # empty poll so the sink directory exists for the caller's read
@@ -237,7 +238,7 @@ def drain_polling_source(
         if expected_rows is not None and i > 0 and total >= expected_rows:
             return total
         q = start_run()
-        finished = q.awaitTermination(timeout_sec)
+        finished = q.awaitTermination(_DRAIN_PASS_TIMEOUT_S)
         if not finished:
             # a pass that outlives the timeout is still RUNNING: reading
             # partial progress would under-count, and the next start_run
@@ -245,8 +246,8 @@ def drain_polling_source(
             # surface the stall instead
             q.stop()
             raise TimeoutError(
-                f"drain pass exceeded {timeout_sec}s; query stopped "
-                "(raise timeout_sec for slow feeds)"
+                f"drain pass exceeded {_DRAIN_PASS_TIMEOUT_S}s; query "
+                "stopped (the feed stalled or one poll returned too much)"
             )
         rows = sum(int(p["numInputRows"]) for p in (q.recentProgress or []))
         total += rows

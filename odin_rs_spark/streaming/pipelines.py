@@ -114,16 +114,34 @@ def read_snapshot(
     return None
 
 
+def _holds_data_file(path: str) -> bool:
+    """Whether a parquet scan of `path` would find a file: Spark skips
+    names starting with '.', and with '_' unless they are `k=v`
+    partition directories."""
+    for _, dirs, files in os.walk(path):
+        dirs[:] = [
+            d for d in dirs
+            if not d.startswith(".") and ("=" in d or not d.startswith("_"))
+        ]
+        if any(not f.startswith(("_", ".")) for f in files):
+            return True
+    return False
+
+
 def read_sink_or_empty(spark: SparkSession, path: str, schema: str) -> DataFrame:
     """Read a foreachBatch sink directory after the stream drains, or an
-    empty DataFrame with `schema` (a DDL string) when the replayed
-    source yielded ZERO batches — foreachBatch never fired, so the sink
-    directory was never created and a bare spark.read.parquet would
-    throw AnalysisException where the query semantics call for an empty
-    result. Reads through `read_snapshot`, so rename-swap crash recovery
-    runs first and it is also safe on snapshot directories."""
-    got = read_snapshot(spark, path)
-    return got if got is not None else spark.createDataFrame([], schema)
+    empty DataFrame with `schema` (a DDL string) when it holds no data
+    file: the replayed source yielded ZERO batches (foreachBatch never
+    fired, so the directory was never created), or every batch was
+    empty (`partitioned_append_sink` lands no partition for an empty
+    batch). A bare spark.read.parquet would throw AnalysisException in
+    both cases where the query semantics call for an empty result.
+    Rename-swap crash recovery runs first, so it is also safe on
+    snapshot directories."""
+    recover_snapshot(path)
+    if _holds_data_file(path):
+        return spark.read.parquet(path)
+    return spark.createDataFrame([], schema)
 
 
 def latest_per_key_merge(key_cols: list[str]):

@@ -1106,10 +1106,35 @@ def test_scratch_query_removes_root_when_the_body_raises(spark):
     assert not os.path.exists(roots[0])
 
 
+def test_executor_blobs_empty_range(spark):
+    from odin_rs_spark.plans.qshared import _executor_blobs
+
+    df = _executor_blobs(spark, 0, content=lambda i: b"x")
+    assert df.schema.simpleString() == "struct<id:bigint,content:binary>"
+    assert df.collect() == []
+
+
+def test_executor_blobs_one_column_per_maker(spark):
+    from odin_rs_spark.plans.qshared import _executor_blobs
+
+    def f(i: int) -> bytes:
+        return b"f%d" % i
+
+    def g(i: int) -> bytes:
+        return bytes([i]) * (i + 1)
+
+    df = _executor_blobs(spark, 3, a=f, b=g)
+    assert df.columns == ["id", "a", "b"]
+    got = sorted((r.id, bytes(r.a), bytes(r.b)) for r in df.collect())
+    assert got == [(i, f(i), g(i)) for i in range(3)]
+
+
 def test_scratch_dirs_live_only_in_qshared():
     """Every catalog query that needs a temp dir goes through
     qshared._scratch_query: no other plans module creates or removes
-    one, or round-trips its result through driver rows."""
+    one, or round-trips its result through driver rows. Likewise every
+    executor-built media fixture goes through qshared._executor_blobs:
+    no other plans module hand-rolls its pandas-UDF scaffold."""
     import pathlib
 
     import odin_rs_spark.plans as plans
@@ -1118,6 +1143,9 @@ def test_scratch_dirs_live_only_in_qshared():
         "tempfile.mkdtemp",
         "shutil.rmtree(root",
         "return spark.createDataFrame(rows",
+        "def _mk(",
+        "F.pandas_udf(_mk",
+        "pd.Series(out)",
     )
     hits = [
         (p.name, b)

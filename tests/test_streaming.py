@@ -618,6 +618,25 @@ def test_read_sink_or_empty_zero_batches(spark, tmp_path):
     assert got.collect()[0].key == "b"
 
 
+def test_read_sink_or_empty_all_batches_empty(spark, tmp_path):
+    """partitioned_append_sink lands no partition for an empty batch,
+    so a sink whose every batch was empty is a directory with no data
+    file: the read returns the empty frame of the declared schema
+    instead of failing parquet schema inference. Once a batch carries
+    rows, the read goes through to them."""
+    d = str(tmp_path / "sink")
+    sink = pipelines.partitioned_append_sink(d)
+    sink(spark.createDataFrame([], "k long"), 0)
+    assert os.path.isdir(d)
+    out = pipelines.read_sink_or_empty(spark, d, "k long")
+    assert out.count() == 0
+    assert out.schema.simpleString() == "struct<k:bigint>"
+
+    sink(spark.createDataFrame([Row(k=5)]), 1)
+    got = pipelines.read_sink_or_empty(spark, d, "k long")
+    assert [(r["k"], r["__batch_id"]) for r in got.collect()] == [(5, 1)]
+
+
 def test_atomic_snapshot_swap_single_write(spark, tmp_path):
     """The swap writes the new state ONCE (to staging) and leaves no
     residue; repeated swaps keep exactly the latest state."""
