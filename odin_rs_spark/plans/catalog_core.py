@@ -551,7 +551,7 @@ def q22_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     return text_ops.lang_id(docs, "text").select("doc_id", "lang", "pred_lang")
 
 
-def _langid_sql() -> str:
+def _q22_sql() -> str:
     hit_exprs = []
     for lang, markers in text_ops.LANG_MARKERS.items():
         inlist = ", ".join(f"'{m}'" for m in markers)

@@ -1,8 +1,10 @@
 """Shared base for the split query catalog (r11): imports, the
-QuerySpec record and the cross-family helpers. The determinism
-rules and the registry live in plans/catalog.py; the query
-families live in catalog_core / catalog_media / catalog_web /
-catalog_lake, chained by wildcard re-export."""
+QuerySpec record and the cross-family helpers. The query families
+live in catalog_core / catalog_media / catalog_web / catalog_lake,
+chained by wildcard re-export, and each family module is the only
+place a query and its oracle are declared. plans/catalog.py holds the
+determinism rules and builds the registry from those names, with the
+cap order on top."""
 
 from __future__ import annotations
 
@@ -33,7 +35,6 @@ class QuerySpec:
     name: str
     fn: Callable[[SparkSession, str], DataFrame]
     sql: str | None  # DuckDB oracle; None → rows-only check
-    tags: str  # SURVEY §2 operator ids this query exercises
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -1200,3 +1200,59 @@ def test_snapshot_delta_sink_jobs_per_batch(spark, tmp_path):
         str(tmp_path / "ckpt"),
     )
     assert jobs == [2, 3]
+
+
+def _q7(spark, sf_dir):
+    raise AssertionError("registry tests never run a query")
+
+
+def test_registry_rejects_query_without_oracle():
+    from odin_rs_spark.plans.catalog import _discover
+
+    with pytest.raises(ValueError, match="q7_orphan"):
+        _discover({"q7_orphan": _q7, "Q8_SQL": "SELECT 1"})
+
+
+def test_registry_rejects_shared_query_number():
+    from odin_rs_spark.plans.catalog import _discover
+
+    ns = {"q7_a": _q7, "q07_b": _q7, "Q7_SQL": "SELECT 1", "Q07_SQL": "SELECT 2"}
+    with pytest.raises(ValueError, match="share number"):
+        _discover(ns)
+
+
+def test_registry_prefers_sql_constant_over_builder():
+    from odin_rs_spark.plans.catalog import _discover
+
+    def built() -> str:
+        raise AssertionError("the builder only runs when no QNN_SQL exists")
+
+    specs = _discover(
+        {"q7_x": _q7, "Q7_SQL": "SELECT 7", "_q7_sql": built, "q9_y": _q7,
+         "_q9_sql": lambda: "SELECT 9", "q141_fractal_dim": _q7, "not_q1_z": _q7}
+    )
+    assert [(s.name, s.sql) for s in specs] == [
+        ("q7_x", "SELECT 7"), ("q9_y", "SELECT 9"), ("q141_fractal_dim", None),
+    ]
+
+
+def test_registry_is_the_catalog_modules():
+    """Every module-level qNN_ def in the four family modules is
+    registered, q141 is the one rows-only query, the cap order leads,
+    and catalog.py restates no query."""
+    import pathlib
+    import re
+
+    import odin_rs_spark.plans as plans
+    from odin_rs_spark.plans.catalog import _CAP_FRONT, CATALOG
+
+    here = pathlib.Path(plans.__file__).parent
+    defined = {
+        m
+        for name in ("core", "media", "web", "lake")
+        for m in re.findall(r"^def (q\d+_\w+)\(", (here / f"catalog_{name}.py").read_text(), re.M)
+    }
+    assert defined == set(CATALOG)
+    assert {n for n, s in CATALOG.items() if s.sql is None} == {"q141_fractal_dim"}
+    assert list(CATALOG)[: len(_CAP_FRONT)] == _CAP_FRONT
+    assert 'QuerySpec("q' not in (here / "catalog.py").read_text()
